@@ -10,9 +10,11 @@ import scala.collection.mutable
   * O(#subscriptions × depth). At thousands of logical subscriptions —
   * the shape the reference's `subs` map invites — this is the difference
   * between dispatch scaling with the subscription count or not.
-  * Measured (tools.DispatchBench, sf0.1 bus, local[32], warm): k=5
-  * subscriptions — loop 0.41 s vs trie 0.28 s; k=200 — loop 5.3 s vs
-  * trie 0.25 s (flat in k; the loop is linear in it).
+  * The benchmark measures both on its own frames (perfbench, `bus_live`
+  * traced): `cdc.dispatch_ns_per_frame` against
+  * `cdc.linear_dispatch_ns_per_frame` at 600 subscriptions, and their
+  * `.k5` / `.k150` variants at 5 and 150 — the trie stays flat in k; the
+  * loop is linear in it.
   *
   * Semantics are exactly [[MqttPattern.matches]] (one spec asserts the
   * equivalence property): '+'/named '+' = one NON-empty level; an empty

@@ -4,6 +4,7 @@ import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -136,14 +137,26 @@ object CdcProto {
     CdcMsg(publisher, channel, contentType, protocol, reply, qos, retain, payload)
   }
 
-  /** Decode straight to an InternalRow of [[MsgStructType]] — shared by
-    * the Catalyst expression (eval + codegen) and the NATS partition
-    * reader, so the wire contract exists exactly once. */
-  def decodeToRow(bytes: Array[Byte]): InternalRow = {
+  /** Decode into `row`'s slots `at` until `at + 8`, in [[MsgStructType]]
+    * order — shared by [[decodeToRow]] and the NATS partition reader, so
+    * the wire-to-row contract exists exactly once. */
+  def decodeInto(bytes: Array[Byte], row: InternalRow, at: Int): Unit = {
     val m = decode(bytes)
-    InternalRow(
-      UTF8String.fromString(m.publisher), UTF8String.fromString(m.channel),
-      UTF8String.fromString(m.contentType), UTF8String.fromString(m.protocol),
-      UTF8String.fromString(m.reply), m.qos, m.retain, m.payload)
+    row.update(at, UTF8String.fromString(m.publisher))
+    row.update(at + 1, UTF8String.fromString(m.channel))
+    row.update(at + 2, UTF8String.fromString(m.contentType))
+    row.update(at + 3, UTF8String.fromString(m.protocol))
+    row.update(at + 4, UTF8String.fromString(m.reply))
+    row.setInt(at + 5, m.qos)
+    row.setBoolean(at + 6, m.retain)
+    row.update(at + 7, m.payload)
+  }
+
+  /** Decode straight to an InternalRow of [[MsgStructType]] — the
+    * Catalyst expression's eval and codegen call this. */
+  def decodeToRow(bytes: Array[Byte]): InternalRow = {
+    val row = new GenericInternalRow(MsgStructType.length)
+    decodeInto(bytes, row, 0)
+    row
   }
 }

@@ -7,6 +7,7 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -68,7 +69,7 @@ class UnavailableBroker extends TextProtocolBroker {
 /** NATS micro-batch source (`DataSourceV2`) — the live-deployment ingress
   * for the CDC bus (reference `lib/nats.js:49-65`: one physical
   * subscription per client on the shared bus subject; envelopes decoded
-  * once then fanned out — here the decode is [[CdcProto.decodeToRow]],
+  * once then fanned out — here the decode is [[CdcProto.decodeInto]],
   * run once per frame in the partition reader).
   *
   * Usage: `spark.readStream.format("graft.nats.NatsSource")
@@ -166,7 +167,7 @@ private[nats] class NatsReaderFactory extends PartitionReaderFactory {
 
 /** Pulls this shard's frames for the batch's sequence range and decodes
   * each protobuf envelope ONCE (reference lib/nats.js:88-90) into an
-  * InternalRow: (seq, ts) metadata prepended to the decoded struct. */
+  * InternalRow: (seq, ts) metadata, then the decoded struct's fields. */
 private[nats] class NatsPartitionReader(p: NatsRangePartition)
     extends PartitionReader[InternalRow] {
 
@@ -178,10 +179,12 @@ private[nats] class NatsPartitionReader(p: NatsRangePartition)
   override def next(): Boolean =
     if (frames.hasNext) {
       val f = frames.next()
-      val env = CdcProto.decodeToRow(f.bytes)
       // fresh row per frame: no buffer reuse
-      current = InternalRow.fromSeq(
-        f.seq +: f.tsMicros +: env.toSeq(CdcProto.MsgStructType))
+      val row = new GenericInternalRow(NatsSource.CdcMsgSchema.length)
+      row.setLong(0, f.seq)
+      row.setLong(1, f.tsMicros)
+      CdcProto.decodeInto(f.bytes, row, 2)
+      current = row
       true
     } else false
 

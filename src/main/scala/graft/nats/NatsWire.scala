@@ -101,121 +101,323 @@ object NatsWire {
 
   def msg(subject: String, sid: Long, payload: Array[Byte],
           replyTo: Option[String] = None): Array[Byte] = {
-    val head = replyTo match {
-      case Some(r) => s"MSG $subject $sid $r ${payload.length}"
-      case None    => s"MSG $subject $sid ${payload.length}"
-    }
-    line(head) ++ payload ++ CRLF
+    val b = new WireBuffer(subject.length + payload.length + 64)
+    writeMsg(b, subject, sid, replyTo, payload)
+    b.toArray
   }
 
   def ok: Array[Byte] = line("+OK")
   def err(message: String): Array[Byte] = line(s"-ERR '$message'")
 
-  // ---- incremental server→client parser ------------------------------
+  private val MsgVerb = "MSG ".getBytes(US_ASCII)
+
+  /** Serialize one MSG frame (header, payload, CRLF) straight into `b`:
+    * the header's subject, sid, reply-to and length are written as bytes,
+    * with no intermediate String. */
+  private[nats] def writeMsg(b: WireBuffer, subject: String, sid: Long,
+                             replyTo: Option[String], payload: Array[Byte]): Unit = {
+    b.put(MsgVerb)
+    b.putAscii(subject); b.put(' ')
+    b.putDecimal(sid); b.put(' ')
+    replyTo match {
+      case Some(r) => b.putAscii(r); b.put(' ')
+      case None    => ()
+    }
+    b.putDecimal(payload.length.toLong)
+    b.put(CRLF); b.put(payload); b.put(CRLF)
+  }
+
+  /** A growable byte buffer that frames are serialized into in place.
+    * Not thread-safe: the owner serializes access. */
+  private[nats] final class WireBuffer(initialCapacity: Int) {
+    private var bytes = new Array[Byte](initialCapacity)
+    private var used = 0
+
+    def size: Int = used
+
+    private def reserve(n: Int): Unit =
+      if (used + n > bytes.length)
+        bytes = java.util.Arrays.copyOf(bytes, math.max(bytes.length * 2, used + n))
+
+    def put(c: Char): Unit = { reserve(1); bytes(used) = c.toByte; used += 1 }
+
+    def put(a: Array[Byte]): Unit = {
+      reserve(a.length)
+      System.arraycopy(a, 0, bytes, used, a.length)
+      used += a.length
+    }
+
+    /** `s` in US-ASCII; a non-ASCII char becomes '?', as `String.getBytes`
+      * does. */
+    def putAscii(s: String): Unit = {
+      reserve(s.length)
+      var i = 0
+      while (i < s.length) {
+        val c = s.charAt(i)
+        bytes(used + i) = if (c < 0x80) c.toByte else '?'.toByte
+        i += 1
+      }
+      used += s.length
+    }
+
+    /** `v` in decimal ASCII, like `v.toString`. */
+    def putDecimal(v: Long): Unit = {
+      // digits are taken from the non-positive magnitude, so Long.MinValue
+      // needs no special case
+      var x = if (v < 0) v else -v
+      var digits = 1
+      var t = x
+      while (t <= -10) { t /= 10; digits += 1 }
+      val sign = if (v < 0) 1 else 0
+      reserve(sign + digits)
+      if (sign == 1) bytes(used) = '-'.toByte
+      var p = used + sign + digits - 1
+      while (p >= used + sign) {
+        bytes(p) = ('0' - (x % 10)).toByte
+        x /= 10
+        p -= 1
+      }
+      used += sign + digits
+    }
+
+    /** Hand the buffered bytes to `out` and empty the buffer. */
+    def writeTo(out: java.io.OutputStream): Unit =
+      if (used > 0) { out.write(bytes, 0, used); used = 0 }
+
+    def toArray: Array[Byte] = java.util.Arrays.copyOf(bytes, used)
+  }
+
+  // ---- incremental parsers --------------------------------------------
 
   /** Incremental CRLF-line + length-prefixed-payload framer shared by the
     * two protocol directions. Feed arbitrary byte chunks; complete
-    * operations are returned as they materialize. State between feeds:
-    * the unconsumed buffer + a pending payload-carrying header
-    * (MSG / PUB) waiting for its bytes. Not thread-safe (one parser per
+    * operations are emitted as they materialize. Control lines are parsed
+    * from the bytes in place: the verb is matched case-insensitively and
+    * the fields are split on whitespace (the runs `\s+` matches, after
+    * trimming the line like `String.trim`). State between feeds: the
+    * unconsumed bytes + the length of a pending payload-carrying header
+    * (MSG / PUB) waiting for its body. Not thread-safe (one parser per
     * connection, like one reader per socket). */
   sealed abstract class WireParser[Op] {
-    // consumed-prefix offset + lazy compaction: consumption advances an
-    // index instead of reallocating the buffer per op, so a payload
-    // arriving in k chunks costs O(n), not O(n·k)
-    private var buf = Array.emptyByteArray
+    // unconsumed bytes live in buf[off, end); consumption advances `off`
+    // and the live bytes move to the front only when a chunk does not fit
+    private var buf = new Array[Byte](4096)
     private var off = 0
-    // a parsed payload-op header whose payload hasn't fully arrived yet:
-    // (byte count, payload → completed op)
-    private var pending: Option[(Int, Array[Byte] => Op)] = None
+    private var end = 0
+    // body length awaited by the last MSG / PUB header; -1 = none
+    private var pendingLen = -1
 
-    /** Parse one CRLF-terminated control line: emit completed ops via
-      * `out`, or call [[awaitPayload]] for a length-prefixed body. */
-    protected def parseLine(l: String,
-                            out: scala.collection.mutable.ArrayBuffer[Op]): Unit
+    /** Parse the control line `buf[from, until)` (CRLF excluded): emit
+      * completed ops, or call [[awaitPayload]] for a length-prefixed body. */
+    protected def parseLine(buf: Array[Byte], from: Int, until: Int, emit: Op => Unit): Unit
+
+    /** The op whose header announced `payload`. */
+    protected def payloadOp(payload: Array[Byte]): Op
 
     /** The op's payload (`n` bytes + CRLF) follows the control line. */
-    protected final def awaitPayload(n: Int)(complete: Array[Byte] => Op): Unit =
-      pending = Some((n, complete))
+    protected final def awaitPayload(n: Int): Unit = {
+      if (n < 0) throw new IllegalArgumentException(s"negative payload length $n")
+      pendingLen = n
+    }
 
-    private def available: Int = buf.length - off
-
-    private def compactAndAppend(chunk: Array[Byte]): Unit = {
-      if (off > 0 || buf.isEmpty) {
-        val live = java.util.Arrays.copyOfRange(buf, off, buf.length)
-        buf = if (chunk.isEmpty) live else live ++ chunk
+    private def append(chunk: Array[Byte], from: Int, len: Int): Unit = {
+      if (end + len > buf.length) {
+        val live = end - off
+        val target =
+          if (live + len > buf.length) new Array[Byte](math.max(buf.length * 2, live + len))
+          else buf
+        System.arraycopy(buf, off, target, 0, live)
+        buf = target
         off = 0
-      } else if (chunk.nonEmpty) buf = buf ++ chunk
+        end = live
+      }
+      System.arraycopy(chunk, from, buf, end, len)
+      end += len
     }
 
     private def indexOfCrlf(): Int = {
       var i = off
-      while (i + 1 < buf.length) {
+      while (i + 1 < end) {
         if (buf(i) == '\r' && buf(i + 1) == '\n') return i
         i += 1
       }
       -1
     }
 
-    final def feed(chunk: Array[Byte]): Seq[Op] = {
-      compactAndAppend(chunk)
-      val out = scala.collection.mutable.ArrayBuffer.empty[Op]
+    /** Parse `chunk[from, from + len)`, passing each completed op to `emit`
+      * in wire order. The parser copies what it keeps, so the caller may
+      * reuse `chunk` once this returns. */
+    final def feedEach(chunk: Array[Byte], from: Int, len: Int)(emit: Op => Unit): Unit = {
+      append(chunk, from, len)
       var progress = true
       while (progress) {
         progress = false
-        pending match {
-          case Some((n, complete)) =>
-            if (available >= n + 2) { // payload + CRLF
-              if (buf(off + n) != '\r' || buf(off + n + 1) != '\n')
-                throw new IllegalArgumentException(
-                  s"payload of $n bytes not terminated by CRLF")
-              out += complete(java.util.Arrays.copyOfRange(buf, off, off + n))
-              off += n + 2
-              pending = None
-              progress = true
-            }
-          case None =>
-            val eol = indexOfCrlf()
-            if (eol >= 0) {
-              val lineStr = new String(buf, off, eol - off, US_ASCII)
-              off = eol + 2
-              parseLine(lineStr, out)
-              progress = true
-            }
+        if (pendingLen >= 0) {
+          val n = pendingLen
+          if (end - off >= n + 2) { // payload + CRLF
+            if (buf(off + n) != '\r' || buf(off + n + 1) != '\n')
+              throw new IllegalArgumentException(s"payload of $n bytes not terminated by CRLF")
+            val payload = java.util.Arrays.copyOfRange(buf, off, off + n)
+            off += n + 2
+            pendingLen = -1
+            emit(payloadOp(payload))
+            progress = true
+          }
+        } else {
+          val eol = indexOfCrlf()
+          if (eol >= 0) {
+            val from = off
+            off = eol + 2
+            parseLine(buf, from, eol, emit)
+            progress = true
+          }
         }
       }
-      out.toSeq
     }
 
-    /** Split `l` into (VERB, rest) — verbs are case-insensitive. */
-    protected final def verbOf(l: String): (String, String) = {
-      val verb = l.takeWhile(c => c != ' ' && c != '\t').toUpperCase
-      (verb, l.drop(verb.length).trim)
+    /** Parse `chunk` and return the completed ops in wire order. */
+    final def feed(chunk: Array[Byte]): Seq[Op] = {
+      val out = Vector.newBuilder[Op]
+      feedEach(chunk, 0, chunk.length)(out += _)
+      out.result()
     }
+
+    // ---- control-line fields, read from the bytes ----------------------
+
+    // [start, end) of the first four fields of the line last tokenized
+    private val fields = new Array[Int](8)
+    private var lastSubjectBytes = Array.emptyByteArray
+    private var lastSubject = ""
+
+    /** End of the verb: the first ' ' or '\t' of the line. */
+    protected final def verbEnd(buf: Array[Byte], from: Int, until: Int): Int = {
+      var i = from
+      while (i < until && buf(i) != ' ' && buf(i) != '\t') i += 1
+      i
+    }
+
+    /** Whether `buf[from, until)` is `verb` (upper case), ignoring case. */
+    protected final def isVerb(buf: Array[Byte], from: Int, until: Int,
+                               verb: Array[Byte]): Boolean =
+      until - from == verb.length && {
+        var i = 0
+        while (i < verb.length && {
+          val b = buf(from + i)
+          (if (b >= 'a' && b <= 'z') b - 32 else b) == verb(i)
+        }) i += 1
+        i == verb.length
+      }
+
+    /** The text after the verb, trimmed. */
+    protected final def restOf(buf: Array[Byte], verbEnd: Int, until: Int): String =
+      new String(buf, verbEnd, until - verbEnd, US_ASCII).trim
+
+    /** Split `buf[from, until)` into fields and return how many there
+      * are; the `*Field` readers take the first four. A blank rest is one
+      * empty field, as `"".split` gives. */
+    protected final def tokenize(buf: Array[Byte], from: Int, until: Int): Int = {
+      var s = from
+      var e = until
+      while (s < e && (buf(s) & 0xFF) <= ' ') s += 1
+      while (e > s && (buf(e - 1) & 0xFF) <= ' ') e -= 1
+      if (s == e) { fields(0) = s; fields(1) = s; return 1 }
+      var n = 0
+      var i = s
+      while (i < e) {
+        val t = i
+        while (i < e && !isSpace(buf(i))) i += 1
+        if (n < 4) { fields(2 * n) = t; fields(2 * n + 1) = i }
+        n += 1
+        while (i < e && isSpace(buf(i))) i += 1
+      }
+      n
+    }
+
+    // the characters of the regex class \s
+    private def isSpace(b: Byte): Boolean =
+      b == ' ' || b == '\t' || b == '\n' || b == '\r' || b == 0x0B || b == '\f'
+
+    protected final def fieldString(buf: Array[Byte], k: Int): String =
+      new String(buf, fields(2 * k), fields(2 * k + 1) - fields(2 * k), US_ASCII)
+
+    /** Field `k` as a subject: a repeat of the previous subject (the bus's
+      * constant subject) returns the same String without decoding it. */
+    protected final def subjectField(buf: Array[Byte], k: Int): String = {
+      val s = fields(2 * k)
+      val e = fields(2 * k + 1)
+      if (!java.util.Arrays.equals(buf, s, e, lastSubjectBytes, 0, lastSubjectBytes.length)) {
+        lastSubjectBytes = java.util.Arrays.copyOfRange(buf, s, e)
+        lastSubject = new String(lastSubjectBytes, US_ASCII)
+      }
+      lastSubject
+    }
+
+    /** Field `k` as a Long, with `String.toLong`'s grammar and errors. */
+    protected final def longField(buf: Array[Byte], k: Int): Long = {
+      val s = fields(2 * k)
+      val e = fields(2 * k + 1)
+      if (e - s < 1 || e - s > 18) return fieldString(buf, k).toLong
+      var v = 0L
+      var i = s
+      while (i < e) {
+        val d = buf(i) - '0'
+        if (d < 0 || d > 9) return fieldString(buf, k).toLong
+        v = v * 10 + d
+        i += 1
+      }
+      v
+    }
+
+    /** Field `k` as an Int, with `String.toInt`'s grammar and errors. */
+    protected final def intField(buf: Array[Byte], k: Int): Int = {
+      val v = longField(buf, k)
+      if (v < Int.MinValue || v > Int.MaxValue) fieldString(buf, k).toInt else v.toInt
+    }
+
+    protected final def malformed(what: String, buf: Array[Byte], from: Int,
+                                  until: Int): Nothing =
+      throw new IllegalArgumentException(
+        s"malformed $what: ${new String(buf, from, until - from, US_ASCII)}")
+
+    protected final def unknownVerb(buf: Array[Byte], from: Int, verbEnd: Int): Nothing =
+      throw new IllegalArgumentException(
+        s"unknown protocol verb: ${new String(buf, from, verbEnd - from, US_ASCII).toUpperCase}")
   }
+
+  private def verb(s: String): Array[Byte] = s.getBytes(US_ASCII)
+  private val MSG = verb("MSG"); private val PUB = verb("PUB")
+  private val INFO = verb("INFO"); private val CONNECT = verb("CONNECT")
+  private val PING = verb("PING"); private val PONG = verb("PONG")
+  private val OK = verb("+OK"); private val ERR = verb("-ERR")
+  private val SUB = verb("SUB"); private val UNSUB = verb("UNSUB")
 
   /** Parser for the server→client stream (what a client reads). */
   final class Parser extends WireParser[ServerOp] {
-    protected def parseLine(l: String,
-                            out: scala.collection.mutable.ArrayBuffer[ServerOp]): Unit = {
-      val (verb, rest) = verbOf(l)
-      verb match {
-        case "INFO" => out += Info(rest)
-        case "PING" => out += Ping
-        case "PONG" => out += Pong
-        case "+OK"  => out += Ok
-        case "-ERR" =>
-          out += Err(rest.stripPrefix("'").stripSuffix("'"))
-        case "MSG" =>
-          val parts = rest.split("\\s+")
-          parts.length match {
-            case 3 => awaitPayload(parts(2).toInt)(Msg(parts(0), parts(1).toLong, None, _))
-            case 4 => awaitPayload(parts(3).toInt)(Msg(parts(0), parts(1).toLong, Some(parts(2)), _))
-            case _ => throw new IllegalArgumentException(s"malformed MSG header: $l")
-          }
-        case other =>
-          throw new IllegalArgumentException(s"unknown protocol verb: $other")
+    // the MSG header awaiting its payload
+    private var subject: String = _
+    private var sid = 0L
+    private var replyTo: Option[String] = None
+
+    protected def payloadOp(payload: Array[Byte]): ServerOp = Msg(subject, sid, replyTo, payload)
+
+    protected def parseLine(buf: Array[Byte], from: Int, until: Int,
+                            emit: ServerOp => Unit): Unit = {
+      val v = verbEnd(buf, from, until)
+      if (isVerb(buf, from, v, MSG)) {
+        val n = tokenize(buf, v, until)
+        if (n != 3 && n != 4) malformed("MSG header", buf, from, until)
+        subject = subjectField(buf, 0)
+        sid = longField(buf, 1)
+        replyTo = if (n == 4) Some(fieldString(buf, 2)) else None
+        awaitPayload(intField(buf, n - 1))
       }
+      else if (isVerb(buf, from, v, PING)) emit(Ping)
+      else if (isVerb(buf, from, v, PONG)) emit(Pong)
+      else if (isVerb(buf, from, v, OK)) emit(Ok)
+      else if (isVerb(buf, from, v, INFO)) emit(Info(restOf(buf, v, until)))
+      else if (isVerb(buf, from, v, ERR))
+        emit(Err(restOf(buf, v, until).stripPrefix("'").stripSuffix("'")))
+      else unknownVerb(buf, from, v)
     }
   }
 
@@ -224,37 +426,38 @@ object NatsWire {
     * grammar; the exact inverse of the client serializers above, and
     * byte-split-proven the same way as [[Parser]]. */
   final class ClientParser extends WireParser[ClientOp] {
-    protected def parseLine(l: String,
-                            out: scala.collection.mutable.ArrayBuffer[ClientOp]): Unit = {
-      val (verb, rest) = verbOf(l)
-      verb match {
-        case "CONNECT" => out += Connect(rest)
-        case "PING"    => out += Ping
-        case "PONG"    => out += Pong
-        case "PUB" =>
-          val parts = rest.split("\\s+")
-          parts.length match {
-            case 2 => awaitPayload(parts(1).toInt)(Pub(parts(0), None, _))
-            case 3 => awaitPayload(parts(2).toInt)(Pub(parts(0), Some(parts(1)), _))
-            case _ => throw new IllegalArgumentException(s"malformed PUB header: $l")
-          }
-        case "SUB" =>
-          val parts = rest.split("\\s+")
-          parts.length match {
-            case 2 => out += SubOp(parts(0), None, parts(1).toLong)
-            case 3 => out += SubOp(parts(0), Some(parts(1)), parts(2).toLong)
-            case _ => throw new IllegalArgumentException(s"malformed SUB line: $l")
-          }
-        case "UNSUB" =>
-          val parts = rest.split("\\s+")
-          parts.length match {
-            case 1 => out += UnsubOp(parts(0).toLong, None)
-            case 2 => out += UnsubOp(parts(0).toLong, Some(parts(1).toInt))
-            case _ => throw new IllegalArgumentException(s"malformed UNSUB line: $l")
-          }
-        case other =>
-          throw new IllegalArgumentException(s"unknown protocol verb: $other")
+    // the PUB header awaiting its payload
+    private var subject: String = _
+    private var replyTo: Option[String] = None
+
+    protected def payloadOp(payload: Array[Byte]): ClientOp = Pub(subject, replyTo, payload)
+
+    protected def parseLine(buf: Array[Byte], from: Int, until: Int,
+                            emit: ClientOp => Unit): Unit = {
+      val v = verbEnd(buf, from, until)
+      if (isVerb(buf, from, v, PUB)) {
+        val n = tokenize(buf, v, until)
+        if (n != 2 && n != 3) malformed("PUB header", buf, from, until)
+        subject = subjectField(buf, 0)
+        replyTo = if (n == 3) Some(fieldString(buf, 1)) else None
+        awaitPayload(intField(buf, n - 1))
       }
+      else if (isVerb(buf, from, v, PING)) emit(Ping)
+      else if (isVerb(buf, from, v, PONG)) emit(Pong)
+      else if (isVerb(buf, from, v, SUB)) {
+        val n = tokenize(buf, v, until)
+        if (n != 2 && n != 3) malformed("SUB line", buf, from, until)
+        val queue = if (n == 3) Some(fieldString(buf, 1)) else None
+        emit(SubOp(fieldString(buf, 0), queue, longField(buf, n - 1)))
+      }
+      else if (isVerb(buf, from, v, UNSUB)) {
+        val n = tokenize(buf, v, until)
+        if (n != 1 && n != 2) malformed("UNSUB line", buf, from, until)
+        val max = if (n == 2) Some(intField(buf, 1)) else None
+        emit(UnsubOp(longField(buf, 0), max))
+      }
+      else if (isVerb(buf, from, v, CONNECT)) emit(Connect(restOf(buf, v, until)))
+      else unknownVerb(buf, from, v)
     }
   }
 }
@@ -285,7 +488,9 @@ object TextProtocolBroker {
   private[nats] final class Session {
     var channel: NatsChannel = _
     var parser = new NatsWire.Parser
-    val frames = scala.collection.mutable.ArrayBuffer.empty[NatsFrame]
+    /** Delivered frames in seq order with no gaps: frames(i).seq ==
+      * frames(0).seq + i. Appends come from drain; commit drops a prefix. */
+    val frames = scala.collection.mutable.ArrayDeque.empty[NatsFrame]
     var seq = 0L
     /** PONGs received — lets [[TextProtocolBroker.flush]] match its PING. */
     var pongs = 0L
@@ -382,12 +587,12 @@ abstract class TextProtocolBroker extends NatsBroker {
     try {
       var chunk = session.channel.read()
       while (chunk.nonEmpty) {
-        session.parser.feed(chunk).foreach {
+        val arrivalMicros = System.currentTimeMillis() * 1000L
+        session.parser.feedEach(chunk, 0, chunk.length) {
           case NatsWire.Ping => session.channel.write(NatsWire.pong)
           case m: NatsWire.Msg =>
             session.seq += 1
-            session.frames +=
-              NatsFrame(session.seq, System.currentTimeMillis() * 1000L, m.payload)
+            session.frames += NatsFrame(session.seq, arrivalMicros, m.payload)
           case NatsWire.Err(msg) =>
             session.resetConnection()
             throw new IllegalStateException(s"NATS server error: $msg")
@@ -422,23 +627,48 @@ abstract class TextProtocolBroker extends NatsBroker {
       throw new IllegalStateException(s"NATS flush timed out after $timeoutMs ms")
   }
 
+  /** Drain the socket and return the highest sequence number buffered.
+    *
+    * Known limit: the drain loops until the socket has been quiet for the
+    * 1 ms read probe, so a publisher whose gaps stay under a millisecond
+    * holds the trigger here for its whole burst, and the burst's ingest
+    * time lands before the micro-batch's job. Reading the socket on a
+    * background thread would lift this, at a cost to per-frame latency
+    * that needs its own measurement. */
   override def latestSeq(): Long = session.synchronized {
     ensureConnected(); drain(); session.seq
   }
 
+  /** Frames in (start, end] of `shard`, sliced by index from the buffer:
+    * `end` came from [[latestSeq]], which already drained the socket. */
   override def fetch(start: Long, end: Long, shard: Int,
                      shards: Int): Iterator[NatsFrame] = session.synchronized {
-    ensureConnected(); drain()
-    // snapshot: the iterator is consumed outside the lock while drain()
-    // may keep appending
-    session.frames.filter(f =>
-      f.seq > start && f.seq <= end && f.seq % shards == shard).toVector.iterator
+    val frames = session.frames
+    if (frames.isEmpty) Iterator.empty
+    else {
+      val base = frames.head.seq
+      val first = math.max(start + 1, base)
+      val last = math.min(end, frames.last.seq)
+      // snapshot: the iterator is consumed outside the lock while drain()
+      // may keep appending and commit() trimming
+      val out = Array.newBuilder[NatsFrame]
+      var seq = first + Math.floorMod(shard - first, shards.toLong)
+      while (seq <= last) {
+        out += frames((seq - base).toInt)
+        seq += shards
+      }
+      out.result().iterator
+    }
   }
 
   /** Committed offsets make old frames unreachable — drop them so the
     * shared session's replay buffer is bounded by in-flight batches, not
     * the subject's lifetime volume. */
   override def commit(upTo: Long): Unit = session.synchronized {
-    session.frames.filterInPlace(_.seq > upTo)
+    val frames = session.frames
+    if (frames.nonEmpty) {
+      val n = math.min(upTo - frames.head.seq + 1, frames.size.toLong)
+      if (n > 0) frames.remove(0, n.toInt)
+    }
   }
 }

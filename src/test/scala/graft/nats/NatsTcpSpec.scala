@@ -163,6 +163,90 @@ class NatsTcpSpec extends AnyFunSuite {
     } finally server.close()
   }
 
+  // The server buffers its writes and flushes once per inbound read chunk;
+  // each reply below must arrive with the client sending nothing further,
+  // so a write left in a buffer fails the read's timeout.
+  test("NatsServer flush points: INFO on connect, PONG, verbose +OK, and a MSG " +
+      "routed from another connection's PUB arrive with no further client traffic") {
+    val server = new NatsServer()
+    try {
+      val sub1 = new RawClient(server.port)
+      val pub1 = new RawClient(server.port)
+      try {
+        Seq(sub1, pub1).foreach(_.socket.setSoTimeout(5000))
+        assert(sub1.next().isInstanceOf[Info], "INFO must be flushed at connect")
+        sub1.send(connect("""{"verbose":true}"""))
+        assert(sub1.next() === Ok, "+OK must be flushed after CONNECT")
+        sub1.send(NatsWire.sub("flush.x", 3L))
+        assert(sub1.next() === Ok, "+OK must be flushed after SUB")
+        sub1.send(ping)
+        assert(sub1.next() === Pong, "PONG must be flushed after PING")
+
+        pub1.handshake()
+        pub1.send(NatsWire.pub("flush.x", "m".getBytes(US_ASCII))) // no PING behind it
+        assert(sub1.next() === Msg("flush.x", 3L, None, "m".getBytes(US_ASCII)),
+          "the publisher's chunk must flush the subscriber it wrote to")
+      } finally { sub1.close(); pub1.close() }
+    } finally server.close()
+  }
+
+  test("NatsServer: a 10k-frame PUB burst reaches plain, '*'/'>', queue-group and " +
+      "UNSUB-max subscriptions with exact per-sid counts, order and payload bytes") {
+    val n = 10000
+    val subjects = Seq("burst.a", "burst.b", "burst.c.d")
+    def subjectOf(i: Int) = subjects(i % 3)
+    def payloadOf(i: Int): Array[Byte] =
+      if (i % 101 == 0) Array.emptyByteArray
+      else (s"$i|" + (if (i % 5 == 0) "\r\n" else "")).getBytes(US_ASCII) ++
+        Array.fill(i % 13)(i.toByte)
+    def frames(sid: Long, ids: Seq[Int]): Seq[Msg] =
+      ids.map(i => Msg(subjectOf(i), sid, None, payloadOf(i)))
+    val all = 0 until n
+    val starMatches = all.filter(_ % 3 != 2) // burst.* skips burst.c.d
+    val expectA = frames(1L, all.filter(_ % 3 == 0)) ++ frames(2L, starMatches) ++
+      frames(3L, all) ++ frames(4L, all.take(25))
+
+    val server = new NatsServer()
+    try {
+      val subA = new RawClient(server.port)
+      val qw1 = new RawClient(server.port)
+      val qw2 = new RawClient(server.port)
+      val pub1 = new RawClient(server.port)
+      try {
+        subA.handshake()
+        subA.send(NatsWire.sub("burst.a", 1L))
+        subA.send(NatsWire.sub("burst.*", 2L))
+        subA.send(NatsWire.sub("burst.>", 3L))
+        subA.send(NatsWire.sub("burst.>", 4L))
+        subA.send(NatsWire.unsub(4L, Some(25)))
+        subA.flush()
+        qw1.handshake(); qw1.send(NatsWire.sub("burst.*", 10L, Some("workers"))); qw1.flush()
+        qw2.handshake(); qw2.send(NatsWire.sub("burst.*", 11L, Some("workers"))); qw2.flush()
+        pub1.handshake()
+
+        // one write of the whole burst, from its own thread: the readers
+        // below must drain concurrently or the sockets fill up
+        val burst = new java.io.ByteArrayOutputStream()
+        all.foreach(i => burst.write(NatsWire.pub(subjectOf(i), payloadOf(i))))
+        val publisher = new Thread(() => pub1.send(burst.toByteArray))
+        publisher.start()
+
+        // per sid the frames keep publish order; one connection's sids
+        // arrive interleaved, so compare each sid's own sequence
+        def bySid(ms: Seq[Msg]): Map[Long, Seq[Msg]] = ms.groupBy(_.sid)
+        assert(bySid(subA.nextMsgs(expectA.length)) === bySid(expectA))
+        // the queue group alternates over its members in connection order
+        val (even, odd) = starMatches.zipWithIndex.partition(_._2 % 2 == 0)
+        assert(qw1.nextMsgs(even.length) === frames(10L, even.map(_._1)))
+        assert(qw2.nextMsgs(odd.length) === frames(11L, odd.map(_._1)))
+        publisher.join(30000)
+
+        // and nothing beyond the expected frames was delivered
+        Seq(subA, qw1, qw2).foreach { c => c.send(ping); assert(c.next() === Pong) }
+      } finally { subA.close(); qw1.close(); qw2.close(); pub1.close() }
+    } finally server.close()
+  }
+
   test("NatsServer: wildcard routing over TCP ('*' and '>') with reply-to pass-through") {
     val server = new NatsServer()
     try {

@@ -71,6 +71,86 @@ class NatsWireSpec extends AnyFunSuite {
     assert(dribble === whole)
   }
 
+  /** Feed `stream` whole, split at every byte boundary, and byte-at-a-time;
+    * every way must yield `want`. */
+  private def assertParsesAtEverySplit[Op](stream: Array[Byte], want: Seq[Op],
+                                           parser: () => WireParser[Op]): Unit = {
+    assert(parser().feed(stream) === want)
+    (1 until stream.length).foreach { cut =>
+      val p = parser()
+      assert(p.feed(stream.take(cut)) ++ p.feed(stream.drop(cut)) === want,
+        s"split at byte $cut diverged")
+    }
+    val p1 = parser()
+    assert(stream.toSeq.flatMap(b => p1.feed(Array(b))) === want)
+  }
+
+  private def ascii(s: String): Array[Byte] = s.getBytes(US_ASCII)
+
+  test("grammar at every byte split: lowercase verbs, tab and repeated separators, " +
+      "reply-to, zero-length and CRLF payloads (server→client)") {
+    val stream = ascii(
+      "msg a.b 7 3\r\nabc\r\n" +
+      "MSG\tcdc.client\t1\tinbox.9\t2\r\nhi\r\n" +
+      "MsG s 2 0\r\n\r\n" +
+      "MSG s  3 \t r.1  6\r\nab\r\ncd\r\n" +
+      "MSG s 4 2 \r\nxy\r\n" +
+      "info\t{\"a\":1}\r\n" +
+      "ping\r\npong\r\n+ok\r\n-err 'Slow Consumer'\r\n")
+    assertParsesAtEverySplit(stream, Seq(
+      Msg("a.b", 7L, None, ascii("abc")),
+      Msg("cdc.client", 1L, Some("inbox.9"), ascii("hi")),
+      Msg("s", 2L, None, Array.emptyByteArray),
+      Msg("s", 3L, Some("r.1"), ascii("ab\r\ncd")),
+      Msg("s", 4L, None, ascii("xy")),
+      Info("{\"a\":1}"),
+      Ping, Pong, Ok, Err("Slow Consumer")), () => new Parser)
+  }
+
+  test("grammar at every byte split: lowercase verbs, tab and repeated separators, " +
+      "reply-to, zero-length and CRLF payloads (client→server)") {
+    val stream = ascii(
+      "connect {\"verbose\":false}\r\n" +
+      "pub s.t 2\r\nhi\r\n" +
+      "PUB\ts\tinbox.1\t0\r\n\r\n" +
+      "Pub s  4\r\n\r\n\r\n\r\n" +
+      "sub a.* q 3\r\n" +
+      "sub\tb  4\r\n" +
+      "unsub 3 10\r\n" +
+      "UNSUB\t4\r\n" +
+      "ping\r\npong\r\n")
+    assertParsesAtEverySplit(stream, Seq(
+      Connect("{\"verbose\":false}"),
+      Pub("s.t", None, ascii("hi")),
+      Pub("s", Some("inbox.1"), Array.emptyByteArray),
+      Pub("s", None, ascii("\r\n\r\n")),
+      SubOp("a.*", Some("q"), 3L),
+      SubOp("b", None, 4L),
+      UnsubOp(3L, Some(10)),
+      UnsubOp(4L, None),
+      Ping, Pong), () => new ClientParser)
+  }
+
+  test("malformed headers throw IllegalArgumentException: non-numeric or negative " +
+      "length, non-numeric sid, missing or extra fields, unterminated payload") {
+    // each input carries its payload bytes, so a parser that checks a field
+    // only once the payload is complete is held to the same contract
+    val serverSide = Seq(
+      "MSG s 1 x\r\nabc\r\n", "MSG s 1 -1\r\nx\r\n", "MSG s x 1\r\na\r\n",
+      "MSG s 1 99999999999\r\na\r\n", "MSG s 1\r\n", "MSG s\r\n", "MSG\r\n",
+      "MSG s 1 r 2 3\r\nab\r\n", "MSG s 1 2\r\nabXY")
+    serverSide.foreach { in =>
+      intercept[IllegalArgumentException](new Parser().feed(ascii(in)))
+    }
+    val clientSide = Seq(
+      "PUB s x\r\nab\r\n", "PUB s -2\r\nab\r\n", "PUB s\r\n", "PUB\r\n",
+      "PUB s r 2 3\r\nab\r\n", "SUB s x\r\n", "SUB s\r\n", "SUB a b 1 2\r\n",
+      "UNSUB x\r\n", "UNSUB 1 x\r\n", "UNSUB\r\n", "UNSUB 1 2 3\r\n")
+    clientSide.foreach { in =>
+      intercept[IllegalArgumentException](new ClientParser().feed(ascii(in)))
+    }
+  }
+
   test("verbs are case-insensitive; malformed MSG header and unknown verbs throw") {
     assert(new Parser().feed("ping\r\n".getBytes(US_ASCII)) === Seq(Ping))
     assert(new Parser().feed("Info {}\r\n".getBytes(US_ASCII)) === Seq(Info("{}")))
