@@ -23,7 +23,9 @@ import graft.plans.MqttPrefixPushdown
   *     overlap theta joins → the binned equi-join form, stats-derived
   *     bin width);
   *   - the [[graft.plans.AsOfJoinStrategy]] planner strategy backing the
-  *     native as-of join operator ([[graft.plans.AsOfJoin]]).
+  *     native as-of join operator ([[graft.plans.AsOfJoin]]);
+  *   - the spawn-free `file:` filesystem pair for checkpoint I/O
+  *     ([[graft.fs.SpawnFreeLocalFs]]), installed once per JVM.
   *
   * Use: `SparkSession.builder().withExtensions(new GraftExtensions)` or
   * `--conf spark.sql.extensions=graft.GraftExtensions`.
@@ -46,6 +48,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           "docroot" -> "https://spark.apache.org/docs/latest"))
 
   override def apply(e: SparkSessionExtensions): Unit = {
+    graft.fs.SpawnFreeLocalFs.install()
     e.injectFunction((
       FunctionIdentifier("mqtt_matches"),
       new ExpressionInfo(classOf[MqttMatchesExpr].getName, "mqtt_matches"),

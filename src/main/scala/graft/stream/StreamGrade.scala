@@ -50,27 +50,39 @@ object StreamGrade {
   private val RocksClass =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  /** One conf window for a whole graded run (single query or a family
-    * co-schedule): 2 shuffle partitions + optionally the RocksDB
-    * provider, set once, restored once — the concurrent member sinks
-    * inside never touch conf (their set/restore helpers detect the
-    * preset and pass through). */
-  private def withGradeConf[A](s: SparkSession, rocksdb: Boolean)(body: => A): A = {
-    val pKey = "spark.sql.shuffle.partitions"
-    val pPrior = s.conf.getOption(pKey)
-    s.conf.set(pKey, sys.env.getOrElse("SPARK_GRAFT_GRADE_PARTITIONS", "2"))
-    // A/B hook: RocksDB changelog checkpointing (per-batch commit uploads
-    // a changelog instead of a full snapshot zip)
-    val clKey = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val clVal = sys.env.get("SPARK_GRAFT_ROCKS_CHANGELOG")
-    val clPrior = s.conf.getOption(clKey)
-    clVal.foreach(v => s.conf.set(clKey, v))
-    try { if (rocksdb) withRocksDb(s)(body) else body }
-    finally {
-      pPrior.fold(s.conf.unset(pKey))(s.conf.set(pKey, _))
-      if (clVal.isDefined) clPrior.fold(s.conf.unset(clKey))(s.conf.set(clKey, _))
+  /** The state partition count of every graded streaming run (see
+    * [[runToSink]]). */
+  private val GradePartitions = "2"
+
+  /** The session whose graded conf window ([[withGradeConf]]) is open:
+    * the members of a family co-schedule run inside it on their own
+    * threads and must not set or restore conf themselves. Set and
+    * cleared under [[gradeLock]]. */
+  @volatile private var openWindow: Option[SparkSession] = None
+
+  /** Run `body` with [[GradePartitions]] shuffle partitions, restoring
+    * the prior setting after — or as is, inside `s`'s open window,
+    * which already set them. */
+  private def withGradePartitions[A](s: SparkSession)(body: => A): A =
+    if (openWindow.exists(_ eq s)) body
+    else {
+      val key = "spark.sql.shuffle.partitions"
+      val prior = s.conf.getOption(key)
+      s.conf.set(key, GradePartitions)
+      try body finally prior.fold(s.conf.unset(key))(s.conf.set(key, _))
     }
-  }
+
+  /** One conf window for a whole graded run (single query or a family
+    * co-schedule): [[GradePartitions]] shuffle partitions + optionally
+    * the RocksDB provider, set once, restored once — the concurrent
+    * member sinks inside never touch conf. */
+  private def withGradeConf[A](s: SparkSession, rocksdb: Boolean)(body: => A): A =
+    withGradePartitions(s) {
+      val outer = openWindow
+      openWindow = Some(s)
+      try { if (rocksdb) withRocksDb(s)(body) else body }
+      finally openWindow = outer
+    }
 
   /** GRADE FAMILIES — the multi-sink co-schedule (r9 Next #3): graded
     * streaming cost is dominated by per-query fixed overhead (streaming
@@ -124,10 +136,8 @@ object StreamGrade {
     // independent harnesses, so they overlap under one conf window
     // like every other family instead of paying seven serial
     // stream-startup/lifetime bills (~25 s serial at r16-pre; the
-    // family bills ~max(member)). Their internal shuffle-partition
-    // set/restore windows write the same "2" the family window preset,
-    // so the concurrent set/restore races are value-idempotent, and
-    // withRocksDb passes through when the provider is preset.
+    // family bills ~max(member)). Their shuffle-partition and
+    // provider scopes pass through inside the family window.
     (Set("cdc_stream_restart_scd2", "cdc_stream_restart_asof",
          "emb_stream_restart_maintained", "cdc_stream_restart_ivm",
          "cdc_stream_restart_ivm_minmax", "cdc_stream_restart_ivm_distinct",
@@ -346,14 +356,7 @@ object StreamGrade {
   private def runToSink(s: SparkSession, out: DataFrame, mode: String,
                         name: String): DataFrame = {
     val sink = s"${name}_${runs.incrementAndGet()}"
-    val key = "spark.sql.shuffle.partitions"
-    val gradeParts = sys.env.getOrElse("SPARK_GRAFT_GRADE_PARTITIONS", "2")
-    // already preset by the family window ([[withGradeConf]]) during a
-    // co-schedule — never mutate conf from a concurrent member thread
-    val preset = s.conf.getOption(key).contains(gradeParts)
-    val prior = if (preset) None else s.conf.getOption(key)
-    if (!preset) s.conf.set(key, gradeParts)
-    try {
+    withGradePartitions(s) {
       val q = out.writeStream.outputMode(mode).format("memory")
         .queryName(sink).trigger(Trigger.AvailableNow()).start()
       try {
@@ -376,7 +379,7 @@ object StreamGrade {
             }
           }
       } finally q.stop()
-    } finally if (!preset) prior.fold(s.conf.unset(key))(s.conf.set(key, _))
+    }
     s.table(sink)
   }
 
@@ -1142,15 +1145,12 @@ object StreamGrade {
     }
     try {
       withRocksDb(s) {
-        val key = "spark.sql.shuffle.partitions"
-        val prior = s.conf.getOption(key)
-        s.conf.set(key, "2")
-        try {
+        withGradePartitions(s) {
           copySlice(0); copySlice(1)
           runLifetime() // lifetime 1: two micro-batches, state into ckpt
           copySlice(2)
           runLifetime() // lifetime 2: RECOVERS state, processes slice 3
-        } finally prior.fold(s.conf.unset(key))(s.conf.set(key, _))
+        }
       }
       // materialize (localCheckpoint is eager) BEFORE deleting outDir
       s.read.parquet(outDir)
@@ -1214,10 +1214,7 @@ object StreamGrade {
     }
     try {
       withRocksDb(s) {
-        val key = "spark.sql.shuffle.partitions"
-        val prior = s.conf.getOption(key)
-        s.conf.set(key, "2")
-        try {
+        withGradePartitions(s) {
           copySlice(0); copySlice(1)
           runLifetime() // lifetime 1: two micro-batches, state into ckpt
           // lifetime 2: the real third slice PLUS the whole second
@@ -1226,7 +1223,7 @@ object StreamGrade {
           copySlice(2)
           copySlice(1, as = "z_redelivered_slice2.parquet")
           runLifetime()
-        } finally prior.fold(s.conf.unset(key))(s.conf.set(key, _))
+        }
       }
       s.read.parquet(outDir)
         .groupBy(col("event_type"))
@@ -1326,16 +1323,13 @@ object StreamGrade {
     }
     try {
       withRocksDb(s) {
-        val key = "spark.sql.shuffle.partitions"
-        val prior = s.conf.getOption(key)
-        s.conf.set(key, "2")
-        try {
+        withGradePartitions(s) {
           copySlice(0); copySlice(1)
           runLifetime() // lifetime 1: two micro-batches, state into ckpt
           copySlice(2)
           copySlice(1, as = "z_redelivered_slice2.parquet")
           runLifetime() // lifetime 2: slice 3 + slice 2 redelivered
-        } finally prior.fold(s.conf.unset(key))(s.conf.set(key, _))
+        }
       }
       fold(s.read.parquet(outDir))
         .localCheckpoint()
@@ -1396,15 +1390,12 @@ object StreamGrade {
     }
     try {
       withRocksDb(s) {
-        val key = "spark.sql.shuffle.partitions"
-        val prior = s.conf.getOption(key)
-        s.conf.set(key, "2")
-        try {
+        withGradePartitions(s) {
           copySlice(0); copySlice(1)
           runLifetime() // lifetime 1: pending probes + history into ckpt
           copySlice(2)
           runLifetime() // lifetime 2: RECOVERS the gate, drains slice 3
-        } finally prior.fold(s.conf.unset(key))(s.conf.set(key, _))
+        }
       }
       s.read.parquet(outDir)
         .select(col("event_id"), col("user_id"),

@@ -1260,7 +1260,8 @@ object Streams {
     * timers within a batch.
     *
     * State per key is BOUNDED: pending probes drain at the watermark,
-    * and the history list compacts on every firing to the rows still
+    * and the history list compacts on each firing that emits a ready
+    * probe, or that finds no pending probe, to the rows still
     * reachable by a future probe — everything after the horizon
     * `min(wm, oldest pending probe)` plus the single latest row at or
     * before it (a future probe is watermark-legal only at `ts ≥ wm`, so
@@ -1269,7 +1270,12 @@ object Streams {
     * (the graded twin's `max(event_id) GROUP BY user_id, ts`) — applied
     * during compaction AND at match time, so duplicates never survive a
     * probe. A key with history but no probes compacts on its own
-    * once-per-batch timer instead of pinning its full history forever. */
+    * once-per-batch timer instead of pinning its full history forever.
+    * While a key has pending probes and none is ready, a firing returns
+    * early without compacting — a history-only timer armed before the
+    * first probe arrived included — so compaction is deferred to the
+    * next firing that releases a probe (at the latest, the oldest
+    * pending probe's own timer). */
   private[stream] class AsOfGate extends StatefulProcessor[Long, AsOfMsg, AsOfHit] {
     @transient private var lefts: ListState[Stamped] = _
     @transient private var rights: ListState[Stamped] = _

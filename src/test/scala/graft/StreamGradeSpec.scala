@@ -474,4 +474,25 @@ class StreamGradeSpec extends AnyFunSuite with BeforeAndAfterAll {
       .orderBy(col("channel"), col("valid_from"), col("event_id")))
     assert(got === want)
   }
+
+  test("a graded run outside a family window restores ambient shuffle partitions, " +
+      "also when they equal the grade's own 2") {
+    val key = "spark.sql.shuffle.partitions"
+    val prior = spark.conf.getOption(key)
+    try {
+      for (ambient <- Seq("2", "7")) {
+        spark.conf.set(key, ambient)
+        // one member alone, outside any window
+        StreamGrade.streamRpcJoin(spark, dir).collect()
+        assert(spark.conf.get(key) === ambient)
+      }
+      // a whole family under its window: the first member runs its
+      // sibling too and parks the result, which the second call consumes
+      spark.conf.set(key, "2")
+      StreamGrade.queries("cdc_stream_rpc_join")(spark, dir).collect()
+      assert(spark.conf.get(key) === "2")
+      StreamGrade.queries("cdc_stream_rpc_outer")(spark, dir).collect()
+      assert(spark.conf.get(key) === "2")
+    } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }
