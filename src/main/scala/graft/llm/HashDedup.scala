@@ -456,11 +456,6 @@ object HashDedup {
       .orderBy(col("a"), col("b"))
   }
 
-  // one maintained store per (sf dir, corpus fingerprint) per JVM — the
-  // VectorOps store-cache discipline; a shutdown hook removes the dir
-  private val maintainedStoreCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-
   /** NEAR-DUP PROBE AGAINST A MAINTAINED INDEX, graded — the dedup
     * index's full CDC lifecycle in one row (the `ann_ivfadc_delete`/
     * `_upsert` discipline applied to LSH): the snapshot's band store is
@@ -475,16 +470,10 @@ object HashDedup {
     * applied twice, or a missing append row all break the hash. */
   def neardupMaintained(s: SparkSession, d: String): DataFrame = {
     registerSkewLogging(s)
-    val fp = dirFingerprint(d)
-    val store = maintainedStoreCache.computeIfAbsent((d, fp), _ => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_bandstore_m_")
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def del(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(del)); f.delete(); ()
-        }
-        del(tmp.toFile)
-      }))
-      val path = tmp.toString + "/bands.parquet"
+    val store = graft.Artifacts.jvm("bandstore.maintained", d, "documents.parquet") {
+      val fp = dirFingerprint(d)
+      val path = graft.Artifacts.tempDir("graft_bandstore_m_").toString +
+        "/bands.parquet"
       writeBandStore(s, d, path)
       val docs = Tables.documents(s, d).withColumn("bkt", refreshBucket)
       deleteBandStore(s, path,
@@ -495,7 +484,7 @@ object HashDedup {
         docs.filter(col("bkt") === 9 && col("doc_id") % 2 === 0).drop("bkt"),
         d, fp, deltaId = "accepted9even:" + fp)
       path
-    })
+    }
     val index = loadBandStore(s, store, d)
       .select(col("band_id"), col("bh"), col("doc_id").as("b"))
     val probes = Tables.documents(s, d).withColumn("bkt", refreshBucket)
@@ -520,62 +509,18 @@ object HashDedup {
     * LSH-capped candidate set, orders of magnitude smaller than the
     * shingle stream feeding it. Measured at sf0.1 before adopting:
     * the 4-query verify family 3.95 s → 1.60 s combined, rows unchanged.
-    * Cache lifecycle: see [[SessionDirCache]]. Callers that need fresh
-    * lineage (the graded minhash_pairs artifact) keep calling
-    * [[minhashPairs]]. */
-  private val pairCache = new SessionDirCache
-
+    * Callers that need fresh lineage (the graded minhash_pairs artifact)
+    * keep calling [[minhashPairs]]. */
   private[graft] def candidatePairs(s: SparkSession, d: String): DataFrame =
-    pairCache.getOrBuild(s, d) {
+    graft.Artifacts.session(s, "dedup.candidatePairs", d, "documents.parquet") {
       registerSkewLogging(s)
       bucketPairs(minhashBandsDf(s, d)).localCheckpoint()
     }
 
-  /** Per-(session, data-dir) memo for localCheckpoint'd lineage frames.
-    *
-    * NOT a session-weak map: a cached DataFrame strongly references its
-    * SparkSession (`df.sparkSession`), so a WeakHashMap key could never
-    * be collected and stopped sessions would pin their checkpoint blocks
-    * for the JVM lifetime. Entries are held strongly instead and evicted
-    * by a SparkListener when the owning context ends, which is the
-    * moment the checkpoint blocks become garbage anyway.
-    *
-    * Staleness guard: each hit revalidates a fingerprint of the parquet
-    * files under `dir/documents.parquet` (name, size, mtime), so data
-    * rewritten under the same path within one session rebuilds instead
-    * of silently serving the old checkpoint. The listing cost is one
-    * directory walk per lookup — bounded by the table's file count, and
-    * only a convenience for mutable test fixtures; production inputs
-    * are immutable snapshot dirs. */
-  /** (name, size, mtime) fingerprint of `dir/documents.parquet` — the
-    * staleness token shared by the in-session caches and the persisted
-    * band store's `_built_from` contract. */
+  /** Fingerprint of `dir/documents.parquet` — the persisted band store's
+    * `_built_from` staleness token. */
   private[graft] def dirFingerprint(d: String): String =
     graft.Fingerprint.ofTables(d, "documents.parquet")
-
-  private final class SessionDirCache {
-    private val m = new java.util.concurrent.ConcurrentHashMap[
-      SparkSession, scala.collection.concurrent.TrieMap[String, (String, DataFrame)]]()
-
-    def getOrBuild(s: SparkSession, d: String)(build: => DataFrame): DataFrame = {
-      val per = m.computeIfAbsent(s, sess => {
-        sess.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-          override def onApplicationEnd(
-              e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
-            m.remove(sess)
-        })
-        scala.collection.concurrent.TrieMap.empty[String, (String, DataFrame)]
-      })
-      val fp = dirFingerprint(d)
-      per.get(d) match {
-        case Some((`fp`, df)) => df
-        case _ => // miss or stale: rebuild and replace (old frame becomes garbage)
-          val df = build
-          per.put(d, (fp, df))
-          df
-      }
-    }
-  }
 
   /** Jaccard ESTIMATE per candidate pair, from the signatures already in
     * hand: the fraction of agreeing minhash components is an unbiased
@@ -695,16 +640,13 @@ object HashDedup {
     * fixpoint → one (node, comp) row per node, comp = the component's min
     * node id. Exposed for direct graph-shape testing (chains exercise
     * diameter-many iterations; LSH cliques converge in ~2). */
-  /** Session-scoped cache of the converged component labels over the
-    * shared candidate pairs — the same discipline as [[candidatePairs]]
-    * one level up: the fixpoint's result frame is tiny (≤ nodes that
-    * appear in any pair) and THREE graded queries (components, size
-    * histogram, canonical keep) consume it, so a combined run pays the
-    * min-label iteration once. */
-  private val labelCache = new SessionDirCache
-
+  /** The converged component labels over the shared candidate pairs,
+    * memoized like [[candidatePairs]]: the fixpoint's result frame is
+    * tiny (≤ nodes that appear in any pair) and THREE graded queries
+    * (components, size histogram, canonical keep) consume it, so a
+    * combined run pays the iteration once. */
   private def componentLabelsFor(s: SparkSession, d: String): DataFrame =
-    labelCache.getOrBuild(s, d) {
+    graft.Artifacts.session(s, "dedup.componentLabels", d, "documents.parquet") {
       componentLabelsStar(candidatePairs(s, d).select(col("a"), col("b")))
         .localCheckpoint()
     }

@@ -1222,18 +1222,10 @@ object VectorOps {
       .orderBy(col("qid"), col("rank"))
   }
 
-  /** (name, size, mtime) fingerprint of `dir/embeddings.parquet` — the
-    * persisted IVF-PQ index's staleness token (the
-    * [[graft.llm.HashDedup.dirFingerprint]] contract for the embeddings
-    * table). */
-  private[graft] def embFingerprint(d: String): String = {
-    def walk(f: java.io.File): Iterator[java.io.File] =
-      if (f.isDirectory) Option(f.listFiles()).iterator.flatMap(_.iterator).flatMap(walk)
-      else Iterator.single(f)
-    val h = walk(new java.io.File(d, "embeddings.parquet"))
-      .map(f => (f.getName, f.length, f.lastModified).hashCode()).sum
-    java.lang.Integer.toHexString(h)
-  }
+  /** Fingerprint of `dir/embeddings.parquet` — the persisted IVF-PQ
+    * index's staleness token. */
+  private[graft] def embFingerprint(d: String): String =
+    graft.Fingerprint.ofTables(d, "embeddings.parquet")
 
   /** Persist the IVF-PQ index as an ARTIFACT — the ANN family's index
     * lifecycle step (the [[graft.llm.HashDedup.writeBandStore]] /
@@ -1479,14 +1471,6 @@ object VectorOps {
     ivfAdcServe(q, broadcast(cents), codes)
   }
 
-  // one store build per (sf dir, corpus fingerprint) per JVM — the
-  // artifact is the point, not the rebuild; a shutdown hook removes the
-  // temp directory. The fingerprint rides in the KEY so a corpus
-  // regenerated under the same dir transparently builds a fresh store
-  // instead of tripping loadIvfPq's staleness gate until JVM restart.
-  private val ivfPqStoreCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-
   /** IVF-PQ served FROM THE PERSISTED ARTIFACT, graded: the index is
     * written once per corpus ([[writeIvfPq]]), re-read through
     * [[loadIvfPq]]'s fingerprint gate, and must answer EXACTLY like the
@@ -1503,26 +1487,16 @@ object VectorOps {
     * MaxSim serving grade, which cuts its ADC pools from the SAME store
     * a batch deployment serves. */
   private[graft] def ivfPqStorePath(s: SparkSession, d: String): String =
-    ivfPqStoreCache.computeIfAbsent((d, embFingerprint(d)), _ => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_ivfpq_")
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def del(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(del)); f.delete(); ()
-        }
-        del(tmp.toFile)
-      }))
-      writeIvfPq(s, d, tmp.toString)
-      tmp.toString
-    })
+    graft.Artifacts.jvm("ivfpq.store", d, "embeddings.parquet") {
+      val tmp = graft.Artifacts.tempDir("graft_ivfpq_").toString
+      writeIvfPq(s, d, tmp)
+      tmp
+    }
 
   /** The delta slice an incremental refresh absorbs: every 10th vector
     * (vec_id ≡ 7 mod 10) — disjoint from the query slice so the graded
     * serve exercises both base- and delta-resident candidates. */
   private def isAppendDelta(c: Column): Column = c % 10 === 7
-
-  // fingerprint in the key: see ivfPqStoreCache
-  private val ivfPqAppendStoreCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
 
   /** IVF-PQ serving AFTER AN INCREMENTAL APPEND, graded — the steady
     * state of a production index between rebuilds: the store is built
@@ -1535,22 +1509,16 @@ object VectorOps {
     * append path encodes the delta EXACTLY as a rebuild-with-frozen-
     * codebooks would: no drift, no loss, no re-touching of base codes. */
   def annIvfAdcAppend(s: SparkSession, d: String): DataFrame = {
-    val fp = embFingerprint(d)
-    val store = ivfPqAppendStoreCache.computeIfAbsent((d, fp), _ => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_ivfpq_app_")
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def del(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(del)); f.delete(); ()
-        }
-        del(tmp.toFile)
-      }))
+    val store = graft.Artifacts.jvm("ivfpq.append", d, "embeddings.parquet") {
+      val fp = embFingerprint(d)
+      val tmp = graft.Artifacts.tempDir("graft_ivfpq_app_").toString
       val all = vecs(s, d)
-      writeIvfPqFrom(all.filter(!isAppendDelta(col("vec_id"))), tmp.toString,
+      writeIvfPqFrom(all.filter(!isAppendDelta(col("vec_id"))), tmp,
         d, "base:" + fp)
-      appendIvfPq(s, tmp.toString, all.filter(isAppendDelta(col("vec_id"))),
+      appendIvfPq(s, tmp, all.filter(isAppendDelta(col("vec_id"))),
         d, fp, deltaId = "delta7:" + fp)
-      tmp.toString
-    })
+      tmp
+    }
     serveIvfPqStore(s, store, d)
   }
 
@@ -1564,10 +1532,6 @@ object VectorOps {
     * apply the identical slice rules, so the grades hold either way. */
   private def isDeleteSlice(c: Column): Column = c % 10 === 3
 
-  // fingerprint in the key: see ivfPqStoreCache
-  private val ivfPqDeleteStoreCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-
   /** IVF-PQ serving AFTER A DELETE, graded — the CDC-native engine's
     * take-down path: the store is built from the FULL corpus, a tenth
     * of it (vec_id ≡ 3 mod 10) is then deleted through [[deleteIvfPq]]
@@ -1579,27 +1543,17 @@ object VectorOps {
     * codebook. A deleted vector surviving anywhere in `codes/` would
     * surface as a candidate and break the hash. */
   def annIvfAdcDelete(s: SparkSession, d: String): DataFrame = {
-    val fp = embFingerprint(d)
-    val store = ivfPqDeleteStoreCache.computeIfAbsent((d, fp), _ => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_ivfpq_del_")
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def del(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(del)); f.delete(); ()
-        }
-        del(tmp.toFile)
-      }))
-      writeIvfPq(s, d, tmp.toString)
-      deleteIvfPq(s, tmp.toString,
+    val store = graft.Artifacts.jvm("ivfpq.delete", d, "embeddings.parquet") {
+      val fp = embFingerprint(d)
+      val tmp = graft.Artifacts.tempDir("graft_ivfpq_del_").toString
+      writeIvfPq(s, d, tmp)
+      deleteIvfPq(s, tmp,
         vecs(s, d).filter(isDeleteSlice(col("vec_id"))).select(col("vec_id")),
         d, fp, deleteId = "takedown3:" + fp)
-      tmp.toString
-    })
+      tmp
+    }
     serveIvfPqStore(s, store, d)
   }
-
-  // fingerprint in the key: see ivfPqStoreCache
-  private val ivfPqUpsertStoreCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
 
   /** IVF-PQ serving AFTER AN UPSERT, graded — the CDC update path: the
     * store is built from the full corpus, then the delete-slice tenth
@@ -1614,21 +1568,15 @@ object VectorOps {
     * deleted without re-encoding) leaves a different candidate set or
     * doubled ADC sums — either breaks the hash. */
   def annIvfAdcUpsert(s: SparkSession, d: String): DataFrame = {
-    val fp = embFingerprint(d)
-    val store = ivfPqUpsertStoreCache.computeIfAbsent((d, fp), _ => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_ivfpq_ups_")
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def del(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(del)); f.delete(); ()
-        }
-        del(tmp.toFile)
-      }))
-      writeIvfPq(s, d, tmp.toString)
+    val store = graft.Artifacts.jvm("ivfpq.upsert", d, "embeddings.parquet") {
+      val fp = embFingerprint(d)
+      val tmp = graft.Artifacts.tempDir("graft_ivfpq_ups_").toString
+      writeIvfPq(s, d, tmp)
       val updated = vecs(s, d).filter(isDeleteSlice(col("vec_id")))
         .withColumn("v", reverse(col("v")))
-      upsertIvfPq(s, tmp.toString, updated, d, fp, upsertId = "update3:" + fp)
-      tmp.toString
-    })
+      upsertIvfPq(s, tmp, updated, d, fp, upsertId = "update3:" + fp)
+      tmp
+    }
     serveIvfPqStore(s, store, d)
   }
 
@@ -1708,18 +1656,15 @@ object VectorOps {
     * cross-multiplied in integers (`|allowed|·|cells| ≤ nprobe·N`) so
     * the graded twin replays the identical decision arithmetic and the
     * choice can never drift between engines on regenerated data. */
-  // (N, |cells|) are corpus constants — memoized per (dir, fingerprint)
-  // so the selector's per-call cost is ONE count over the posting list
-  private val corpusStatsCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), (Long, Long)]()
-
+  // (N, |cells|) are corpus constants, memoized so the selector's
+  // per-call cost is ONE count over the posting list
   private[graft] def annFilteredChoiceIsExact(s: SparkSession, d: String,
                                               allowed: DataFrame): Boolean = {
-    val (n, cells) = corpusStatsCache.computeIfAbsent((d, embFingerprint(d)), _ => {
+    val (n, cells) = graft.Artifacts.jvm("ivf.corpusStats", d, "embeddings.parquet") {
       val st = vecs(s, d)
         .agg(count(lit(1)).as("n"), countDistinct(col("label")).as("cells")).head
       (st.getLong(0), st.getLong(1))
-    })
+    }
     allowed.count() * cells <= 4L * n
   }
 

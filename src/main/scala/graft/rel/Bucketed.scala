@@ -17,8 +17,8 @@ import graft.Tables
   *
   * The bucketed copies are EXTERNAL catalog tables under the session's
   * warehouse dir, keyed by the source dir's fingerprint — regenerated
-  * testdata gets fresh tables, re-invocations reuse them (the
-  * graphCache discipline; the write is prep, not the operator), and a
+  * testdata gets fresh tables, re-invocations reuse them (the write is
+  * prep, not the operator), and a
   * NEW JVM adopts a previous process's complete tables instead of
   * rewriting ([[Warehouse.ensureTable]] — cross-process lock, adopt
   * on `_SUCCESS`, never delete a complete location). The

@@ -3009,15 +3009,15 @@ object RelQueries {
     * table-read by two orders of magnitude: at sf0.1 cold,
     * graph_pagerank 28.0 s / graph_trustrank 57.4 s /
     * graph_pagerank_dyn 12.9 s vs ≤0.5 s warm
-    * (tools/PagerankCostProbe). Three fingerprint-keyed tables carry
+    * (docs/NOTES.md, r16 item 6). Three fingerprint-keyed tables carry
     * the full unseeded iterate SEQUENCE (iter, node, r) — r0..r3, so
     * `graph_converged`'s deltas read back too — the halted dynamic
     * frame (+ its halt iteration as a constant column), and the
     * TrustRank fixpoint. The PREP ITSELF is now lazy: a cold JVM that
     * adopts all three tables never builds the edge frame at all
     * ([[pagerankIterationsRun]] is the zero-iterations spec hook). */
-  private final class GraphPrep(s: SparkSession, d: String) {
-    private val fp = graphFingerprint(d)
+  private final class GraphPrep(s: SparkSession, d: String) extends AutoCloseable {
+    private val fp = graphFp(d)
     private[this] var prepBuilt = false
     private lazy val prep: (DataFrame, DataFrame) = {
       val built = buildPurchaseGraphFrames(s, d)
@@ -3027,7 +3027,7 @@ object RelQueries {
     def ew: DataFrame = prep._1
     def nodes: DataFrame = prep._2
     /** Eviction hook: never force the lazy build just to tear down. */
-    def unpersistQuietly(): Unit =
+    override def close(): Unit =
       if (prepBuilt) { scala.util.Try(prep._1.unpersist(false)); () }
 
     lazy val pagerankRanks: Seq[DataFrame] = {
@@ -3110,70 +3110,16 @@ object RelQueries {
     }
   }
 
-  /** (name, size, mtime) fingerprint of the purchase graph's input
-    * tables (lineitem + orders for the edges, customer for the
-    * TrustRank seed set) under `d` — the r7 staleness token
-    * ([[graft.llm.HashDedup.dirFingerprint]] contract) for
-    * [[graphCache]], so testdata regenerated under a live JVM rebuilds
-    * the prep instead of serving stale checkpointed frames. */
-  private def graphFingerprint(d: String): String =
-    graft.Fingerprint.ofTables(
-      d, "lineitem.parquet", "orders.parquet", "customer.parquet")
+  /** The purchase graph's input tables: lineitem + orders for the
+    * edges, customer for the TrustRank seed set. */
+  private val GraphTables =
+    Seq("lineitem.parquet", "orders.parquet", "customer.parquet")
 
-  // JVM-lifetime memo per (SparkSession, sf dir) — the StreamGrade
-  // sliceCache rationale: the bench re-runs each graph query 3-4× and
-  // all three graph queries share the identical prep, so rebuilding the
-  // cached frames per invocation bills pure harness cost. Keyed by the
-  // session OBJECT (not an identity hash — hashes collide and can hand
-  // out frames bound to a stopped context) with the HashDedup
-  // SessionDirCache discipline: a SparkListener evicts the session's
-  // entries when its context ends, and every hit revalidates the input
-  // tables' fingerprint so a regenerated dir rebuilds in-session.
-  // Sessions minted via newSession() over a long-lived shared context
-  // would otherwise accumulate preps (and persisted edge frames) until
-  // context stop; a WeakHashMap cannot fix that here because GraphPrep's
-  // frames strongly reference their session (value→key reference pins
-  // every weak entry), so the map is LRU-BOUNDED instead: beyond
-  // GraphCacheSessions live sessions the least-recently-used session's
-  // preps are dropped and their edge caches unpersisted.
-  private val GraphCacheSessions = 4
-  private val graphCache = new java.util.LinkedHashMap[
-      SparkSession, scala.collection.mutable.Map[String, (String, GraphPrep)]](
-      16, 0.75f, /*accessOrder=*/ true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[
-        SparkSession, scala.collection.mutable.Map[String, (String, GraphPrep)]])
-        : Boolean = {
-      val evict = size() > GraphCacheSessions
-      if (evict) e.getValue.values.foreach { case (_, old) =>
-        old.unpersistQuietly()
-      }
-      evict
-    }
-  }
-
+  // the bench re-runs each graph query 3-4× and all three graph queries
+  // share this prep, so it is memoized per session
   private def purchaseGraph(s: SparkSession, d: String): GraphPrep =
-    graphCache.synchronized {
-      val per = Option(graphCache.get(s)).getOrElse {
-        s.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-          override def onApplicationEnd(
-              e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
-            graphCache.synchronized { graphCache.remove(s); () }
-        })
-        val m = scala.collection.mutable.Map.empty[String, (String, GraphPrep)]
-        graphCache.put(s, m)
-        m
-      }
-      val fp = graphFingerprint(d)
-      per.get(d) match {
-        case Some((`fp`, prep)) => prep
-        case stale =>
-          // miss or stale: rebuild, free the replaced edge cache's blocks
-          stale.foreach { case (_, old) => old.unpersistQuietly() }
-          val prep = new GraphPrep(s, d)
-          per.put(d, (fp, prep))
-          prep
-      }
-    }
+    graft.Artifacts.session(s, "graph.purchase", d, GraphTables: _*)(
+      new GraphPrep(s, d))
 
   private def buildPurchaseGraphFrames(sess: SparkSession,
                                        dir: String): (DataFrame, DataFrame) = {
@@ -3256,15 +3202,11 @@ object RelQueries {
     * The projected (order, part) frame checkpoints BEFORE its
     * self-join so lineitem is scanned once.
     *
-    * MEMOIZED per (session, sf dir) with the [[purchaseGraph]]
-    * discipline (the r13 VERDICT Next #2): the bench re-runs each
-    * graph query 3-4× and all four queries share this identical prep
-    * — rebuilding the distinct + self-join + distinct (~2 M edges at
-    * sf0.1) per invocation billed three builds per pass where one
-    * pays. Every hit revalidates the lineitem fingerprint so a
-    * regenerated dir rebuilds in-session; the same LRU bound and
-    * application-end listener as [[graphCache]] keep long-lived
-    * shared contexts from accumulating edge frames. */
+    * Memoized per session like [[purchaseGraph]] (the r13 VERDICT
+    * Next #2): the bench re-runs each graph query 3-4× and all four
+    * queries share this identical prep — rebuilding the distinct +
+    * self-join + distinct (~2 M edges at sf0.1) per invocation billed
+    * three builds per pass where one pays. */
   private def coOrderEdges(s: SparkSession, d: String): DataFrame =
     coOrderPrep(s, d).edges
 
@@ -3309,7 +3251,8 @@ object RelQueries {
     s"graft_pr_dyn_m${DynamicMaxIter}_$fp"
   private[graft] def trTable(fp: String): String =
     s"graft_tr_r3_$fp"
-  private[graft] def graphFp(d: String): String = graphFingerprint(d)
+  private[graft] def graphFp(d: String): String =
+    graft.Fingerprint.ofTables(d, GraphTables: _*)
 
   private final class CoOrderPrep(s: SparkSession, d: String, fp: String) {
     val edges: DataFrame = {
@@ -3363,44 +3306,8 @@ object RelQueries {
   }
 
   private def coOrderPrep(s: SparkSession, d: String): CoOrderPrep =
-    coEdgeCache.synchronized {
-      val per = Option(coEdgeCache.get(s)).getOrElse {
-        s.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-          override def onApplicationEnd(
-              e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
-            coEdgeCache.synchronized { coEdgeCache.remove(s); () }
-        })
-        val m = scala.collection.mutable.Map.empty[String, (String, CoOrderPrep)]
-        coEdgeCache.put(s, m)
-        m
-      }
-      val fp = lineitemFingerprint(d)
-      per.get(d) match {
-        case Some((`fp`, prep)) => prep
-        case _ =>
-          val prep = new CoOrderPrep(s, d, fp)
-          per.put(d, (fp, prep))
-          prep
-      }
-    }
-
-  /** (name, size, mtime) fingerprint of lineitem.parquet alone — the
-    * co-order graph's only input ([[graphFingerprint]] hashes three
-    * tables because the purchase graph joins orders too). */
-  private def lineitemFingerprint(d: String): String =
-    graft.Fingerprint.ofTables(d, "lineitem.parquet")
-
-  // session-keyed LRU memo of the co-order edge frame — the graphCache
-  // shape, but holding ONE localCheckpoint(true) frame per dir whose
-  // blocks free with the RDD on eviction/GC (no explicit persist to
-  // unpersist), so eviction is a plain drop
-  private val coEdgeCache = new java.util.LinkedHashMap[
-      SparkSession, scala.collection.mutable.Map[String, (String, CoOrderPrep)]](
-      16, 0.75f, /*accessOrder=*/ true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[
-        SparkSession, scala.collection.mutable.Map[String, (String, CoOrderPrep)]])
-        : Boolean = size() > GraphCacheSessions
-  }
+    graft.Artifacts.session(s, "graph.coOrder", d, "lineitem.parquet")(
+      new CoOrderPrep(s, d, graft.Fingerprint.ofTables(d, "lineitem.parquet")))
 
   private def buildCoOrderEdges(s: SparkSession, d: String): DataFrame = {
     val pe = Tables.lineitem(s, d)

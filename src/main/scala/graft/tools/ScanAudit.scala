@@ -28,6 +28,7 @@ object ScanAudit {
 
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder().master("local[8]")
+      .withExtensions(new graft.GraftExtensions)
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false").getOrCreate()
