@@ -169,10 +169,10 @@ object CdcBus {
   /** The routing surface through the SQL entry point: registered
     * `mqtt_matches` + the prefix-pushdown rule apply to `spark.sql` text
     * exactly as to the DataFrame API — a reference user's subscription
-    * runs as ANSI SQL. (Functions are re-registered directly so the
-    * query also works on sessions built without extensions.) */
+    * runs as ANSI SQL. ([[graft.GraftSession.install]] registers the
+    * functions in a session built without extensions.) */
   def sqlRoute(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
+    graft.GraftSession.install(s)
     Tables.bus(s, d).createOrReplaceTempView("graft_bus_v")
     s.sql("""
       SELECT element_at(split(channel, '/'), 2) AS etype,

@@ -1,6 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftBridge, SparkSession}
+import org.apache.spark.sql.{AnalysisException, Column, GraftBridge}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+
+import graft.plans.{AsOfMarkerExpr, AsOfSqlRewrite}
 
 /** Column-level API + SQL registration for graft's custom expressions. */
 object GraftFunctions {
@@ -46,13 +50,8 @@ object GraftFunctions {
     GraftBridge.column(DecodeCdcMsgExpr(GraftBridge.expression(bytes)))
 
   /** SQL builder for mqtt_dispatch: the pattern set must be a foldable
-    * ARRAY<STRING> literal (the trie is compiled at plan time). Shared
-    * by [[register]] and [[graft.GraftExtensions]]. */
-  private[graft] def dispatchBuilder(
-      exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-      : org.apache.spark.sql.catalyst.expressions.Expression = {
-    if (exprs.length != 2) throw new IllegalArgumentException(
-      s"mqtt_dispatch(channel, patterns) takes 2 arguments, got ${exprs.length}")
+    * ARRAY<STRING> literal (the trie is compiled at plan time). */
+  private def dispatchBuilder(exprs: Seq[Expression]): Expression = {
     // element type and nullness are validated BEFORE eval so a wrong
     // literal gets the friendly message, not a ClassCastException/NPE
     val pats = exprs(1) match {
@@ -97,12 +96,8 @@ object GraftFunctions {
         GraftBridge.expression(score), k).toAggregateExpression())
 
   /** SQL builder for bottomk_by_hash: k must be a foldable integer
-    * literal (the buffer bound is fixed at plan time). Shared by
-    * [[register]] and [[graft.GraftExtensions]] so the two registration
-    * paths cannot drift. */
-  private[graft] def bottomkBuilder(
-      exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-      : org.apache.spark.sql.catalyst.expressions.Expression = {
+    * literal (the buffer bound is fixed at plan time). */
+  private def bottomkBuilder(exprs: Seq[Expression]): Expression = {
     val k = exprs(1) match {
       case e if e.foldable => e.eval(null) match {
         case i: java.lang.Integer => i.intValue()
@@ -120,14 +115,9 @@ object GraftFunctions {
 
   /** SQL builder for max_sim(q, d, tokens, dim): the grid shape must be
     * foldable INT literals — the kernel specializes its loops at plan
-    * time. Shared by [[register]] and [[graft.GraftExtensions]]. */
-  private[graft] def maxSimBuilder(
-      exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-      : org.apache.spark.sql.catalyst.expressions.Expression = {
-    if (exprs.length != 4) throw new IllegalArgumentException(
-      "max_sim(q, d, tokens, dim) takes exactly 4 arguments")
-    def intLit(e: org.apache.spark.sql.catalyst.expressions.Expression,
-               name: String): Int = e match {
+    * time. */
+  private def maxSimBuilder(exprs: Seq[Expression]): Expression = {
+    def intLit(e: Expression, name: String): Int = e match {
       case org.apache.spark.sql.catalyst.expressions.Literal(
             v: Int, org.apache.spark.sql.types.IntegerType) => v
       case other => throw new IllegalArgumentException(
@@ -140,15 +130,9 @@ object GraftFunctions {
 
   /** SQL builder for dtw_band(x, y, n, band): the series length and
     * band must be foldable INT literals — the DP loops and rolling-row
-    * width specialize at plan time (the [[maxSimBuilder]] discipline).
-    * Shared by [[register]] and [[graft.GraftExtensions]]. */
-  private[graft] def dtwBandBuilder(
-      exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-      : org.apache.spark.sql.catalyst.expressions.Expression = {
-    if (exprs.length != 4) throw new IllegalArgumentException(
-      "dtw_band(x, y, n, band) takes exactly 4 arguments")
-    def intLit(e: org.apache.spark.sql.catalyst.expressions.Expression,
-               name: String): Int = e match {
+    * width specialize at plan time (the [[maxSimBuilder]] discipline). */
+  private def dtwBandBuilder(exprs: Seq[Expression]): Expression = {
+    def intLit(e: Expression, name: String): Int = e match {
       case org.apache.spark.sql.catalyst.expressions.Literal(
             v: Int, org.apache.spark.sql.types.IntegerType) => v
       case other => throw new IllegalArgumentException(
@@ -158,29 +142,41 @@ object GraftFunctions {
     DtwBandExpr(exprs(0), exprs(1), intLit(exprs(2), "n"), intLit(exprs(3), "band"))
   }
 
-  /** Register graft's functions for SQL usage in the given session
-    * (same set as [[graft.GraftExtensions]], for sessions built without
-    * extension injection). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "mqtt_matches", exprs => MqttMatchesExpr(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_product", exprs => DotProductExpr(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bottomk_by_hash", bottomkBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "decode_cdc_msg", exprs => DecodeCdcMsgExpr(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "mqtt_dispatch", dispatchBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "max_sim", maxSimBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dtw_band", dtwBandBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "winnow_fps",
-      exprs => WinnowFpsExpr(exprs(0), graft.llm.HashDedup.shingleKernel), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "band_hashes",
-      exprs => BandHashesExpr(exprs(0), graft.llm.HashDedup.shingleKernel), "built-in")
-  }
+  /** One SQL function: identifier, catalog info and an arity-checked
+    * builder. */
+  private def fn(name: String, cls: Class[_], n: Int)(build: Seq[Expression] => Expression)
+      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), exprs => {
+      // Spark's own builder arity error: a clean AnalysisException naming
+      // the function, never an IndexOutOfBoundsException or extra
+      // arguments silently dropped
+      if (exprs.length != n) throw new AnalysisException(
+        errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
+        messageParameters = Map(
+          "functionName" -> s"`$name`",
+          "expectedNum" -> n.toString,
+          "actualNum" -> exprs.length.toString,
+          "docroot" -> "https://spark.apache.org/docs/latest"))
+      build(exprs)
+    })
+
+  /** graft's SQL functions, declared once: [[graft.GraftExtensions]]
+    * injects them and [[graft.GraftSession.install]] registers them in a
+    * plain session. */
+  private[graft] val sqlFunctions
+      : Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
+    fn("mqtt_matches", classOf[MqttMatchesExpr], 2)(e => MqttMatchesExpr(e(0), e(1))),
+    fn("dot_product", classOf[DotProductExpr], 2)(e => DotProductExpr(e(0), e(1))),
+    fn("bottomk_by_hash", classOf[BottomKByHashAgg], 2)(bottomkBuilder),
+    fn("decode_cdc_msg", classOf[DecodeCdcMsgExpr], 1)(e => DecodeCdcMsgExpr(e(0))),
+    fn("mqtt_dispatch", classOf[MqttDispatchExpr], 2)(dispatchBuilder),
+    fn("max_sim", classOf[MaxSimExpr], 4)(maxSimBuilder),
+    fn("dtw_band", classOf[DtwBandExpr], 4)(dtwBandBuilder),
+    fn("winnow_fps", classOf[WinnowFpsExpr], 1)(
+      e => WinnowFpsExpr(e(0), graft.llm.HashDedup.shingleKernel)),
+    fn("band_hashes", classOf[BandHashesExpr], 1)(
+      e => BandHashesExpr(e(0), graft.llm.HashDedup.shingleKernel)),
+    // the marker the ASOF JOIN rewrite leaves for resolution
+    // (graft.plans.AsOfSql)
+    fn(AsOfSqlRewrite.MarkerFn, classOf[AsOfMarkerExpr], 1)(e => AsOfMarkerExpr(e(0))))
 }

@@ -137,8 +137,9 @@ case class AsOfJoin(
   * [[BroadcastAsOfJoinExec]] — the 100 TB fact side is neither shuffled
   * NOR sorted, the dimension history ships to every executor once —
   * otherwise the co-partitioned sort-merge [[AsOfJoinExec]]. Injected
-  * by [[graft.GraftExtensions]] and self-registered by [[AsOf.join]]
-  * for sessions built without the extensions. */
+  * by [[graft.GraftExtensions]]; [[AsOf.join]] calls
+  * [[graft.GraftSession.install]], which adds it to sessions built
+  * without the extensions. */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case j @ AsOfJoin(l, r, lk, rk, lt, rt, tol, dir, hint, exact) =>
@@ -687,7 +688,7 @@ object AsOf {
       s"asof join needs matching key lists, got $leftOn / $rightOn " +
         "(both empty = keyless/global as-of)")
     val s = left.sparkSession
-    GraftBridge.ensureStrategy(s, AsOfJoinStrategy)
+    graft.GraftSession.install(s)
     val lPlan = GraftBridge.analyzed(left)
     // a broadcast() hint on the right side is honored here (the stock
     // EliminateResolvedHint only transfers hints into Join nodes and

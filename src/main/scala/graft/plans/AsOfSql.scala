@@ -515,8 +515,8 @@ object AsOfSqlCheck extends (LogicalPlan => Unit) {
   * built with [[graft.GraftExtensions]] this is equivalent to
   * `spark.sql` (the injected parser rewrites, the injected resolution
   * rule converts — the manual steps below are no-ops); in a plain
-  * session it self-installs the strategy and marker function, applies
-  * the rewrite itself, and runs the conversion on the analyzed plan
+  * session [[graft.GraftSession.install]] adds the strategy and marker
+  * function, and this runner applies the rewrite itself and runs the conversion on the analyzed plan
   * (analysis tolerates the inert boolean marker; conversion happens
   * before any optimization, which is lazy). [[AsOfSqlCheck]] runs
   * either way, so a condition shape that hides the marker is loud in
@@ -525,12 +525,7 @@ object AsOfSql {
   def apply(s: org.apache.spark.sql.SparkSession, sqlText: String)
       : org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.GraftBridge
-    GraftBridge.ensureStrategy(s, AsOfJoinStrategy)
-    GraftBridge.ensureFunction(s,
-      FunctionIdentifier(AsOfSqlRewrite.MarkerFn),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[AsOfMarkerExpr].getName, AsOfSqlRewrite.MarkerFn),
-      exprs => AsOfMarkerExpr(exprs.head))
+    graft.GraftSession.install(s)
     val text = AsOfSqlRewrite.rewrite(sqlText).getOrElse(sqlText)
     val df = GraftBridge.ofRows(s, GraftBridge.parsePlan(s, text))
     val analyzed = GraftBridge.analyzed(df)

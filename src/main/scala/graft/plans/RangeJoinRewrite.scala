@@ -79,8 +79,8 @@ import org.apache.spark.sql.types.{ByteType, DoubleType, FloatType, IntegerType,
   *
   * Wiring: injected by [[graft.GraftExtensions]] into the operator-
   * optimization batch (so the rewritten plan re-enters pushdown/pruning
-  * in the same fixed point); [[ensure]] self-installs via
-  * `experimental.extraOptimizations` for sessions built without the
+  * in the same fixed point); [[graft.GraftSession.install]] appends it
+  * to `experimental.extraOptimizations` for sessions built without the
   * extensions (idempotent — once rewritten, the join has an equi
   * conjunct and no longer matches).
   */
@@ -101,14 +101,6 @@ object RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
   private val IdCol = "__graft_range_id"
   private val MarkCol = "__graft_range_hit"
   private val PackCol = "__graft_range_row"
-
-  /** Idempotently make the rule visible to a session built WITHOUT
-    * [[graft.GraftExtensions]] (the [[GraftBridge.ensureStrategy]]
-    * discipline): appended to `experimental.extraOptimizations`, which
-    * the optimizer runs as a late batch. In an extensions-built session
-    * the operator-batch copy fires first and the late copy finds
-    * nothing left to match. */
-  def ensure(s: SparkSession): Unit = GraftBridge.ensureOptimizerRule(s, this)
 
   // ---- condition classification ----
 

@@ -1555,7 +1555,7 @@ object RelQueries {
     * asserts the executed plan is nested-loop-free and that the rule
     * stands down when an equi conjunct is present. */
   def rangeJoinAuto(s: SparkSession, d: String): DataFrame = {
-    graft.plans.RangeJoinRewrite.ensure(s)
+    graft.GraftSession.install(s)
     val ev = Tables.events(s, d)
     val wins = ev.select(date_trunc("DAY", col("ts")).as("day")).distinct()
       .select(col("day"),
@@ -1574,7 +1574,7 @@ object RelQueries {
     * engines" discipline for the range-join family (the DuckDB twin IS
     * this query's naive form). */
   def rangeJoinSql(s: SparkSession, d: String): DataFrame = {
-    graft.plans.RangeJoinRewrite.ensure(s)
+    graft.GraftSession.install(s)
     Tables.events(s, d).createOrReplaceTempView("events_rjsql")
     s.sql("""
       |WITH wins AS (
@@ -1593,7 +1593,7 @@ object RelQueries {
     * predicate literal itself (no stats pass needed) and plans the
     * ±2-slack value-bin equi join. Twin: the naive band join. */
   def bandJoinAuto(s: SparkSession, d: String): DataFrame = {
-    graft.plans.RangeJoinRewrite.ensure(s)
+    graft.GraftSession.install(s)
     val ev = Tables.events(s, d)
     val p = ev.filter(col("event_type") === "purchase" && col("user_id") < 10)
       .select(col("event_id").as("pid"), col("value").as("pv"))
@@ -1611,7 +1611,7 @@ object RelQueries {
     * sides to stats-derived bins and applies the canonical-bin
     * exactly-once rule. Twin: the naive overlap join. */
   def overlapJoinAuto(s: SparkSession, d: String): DataFrame = {
-    graft.plans.RangeJoinRewrite.ensure(s)
+    graft.GraftSession.install(s)
     val spans = Tables.events(s, d).filter(col("user_id") < 20)
       .groupBy(col("user_id"), date_trunc("DAY", col("ts")).as("day"))
       .agg(min(col("ts")).as("lo"), max(col("ts")).as("hi"))
@@ -1641,7 +1641,7 @@ object RelQueries {
     * [[bandJoinAuto]]'s |l−r| ≤ eps shape: intervals here are DATA
     * (per-row bounds), not a constant radius. */
   def rangeJoinValues(s: SparkSession, d: String): DataFrame = {
-    graft.plans.RangeJoinRewrite.ensure(s)
+    graft.GraftSession.install(s)
     val ev = Tables.events(s, d)
     val p = ev.filter(col("event_type") === "purchase" && col("user_id") < 10)
       .select(col("event_id").as("pid"), col("value").as("lo"),
@@ -1677,7 +1677,7 @@ object RelQueries {
     * this as BroadcastNestedLoopJoin LeftOuter — the outer-join form
     * of the scale-killer the inner rows already grade. */
   def rangeJoinLeftAuto(s: SparkSession, d: String): DataFrame = {
-    graft.plans.RangeJoinRewrite.ensure(s)
+    graft.GraftSession.install(s)
     val ev = Tables.events(s, d)
     val p = ev.filter(col("event_type") === "purchase")
       .select(col("event_id"), col("ts"), col("value"))
@@ -1694,7 +1694,7 @@ object RelQueries {
     * row at most once, which binning preserves because the probe side
     * is single-bin. Twin: the EXISTS subquery. */
   def rangeJoinSemiAuto(s: SparkSession, d: String): DataFrame = {
-    graft.plans.RangeJoinRewrite.ensure(s)
+    graft.GraftSession.install(s)
     val ev = Tables.events(s, d)
     ev.join(sparseWins(ev),
         col("ts") >= col("lo") && col("ts") < col("hi"), "left_semi")
@@ -1709,7 +1709,7 @@ object RelQueries {
     * the covering copy: no (bin ∧ predicate) match ⟺ no predicate
     * match. Twin: the NOT EXISTS subquery. */
   def rangeJoinAntiAuto(s: SparkSession, d: String): DataFrame = {
-    graft.plans.RangeJoinRewrite.ensure(s)
+    graft.GraftSession.install(s)
     val ev = Tables.events(s, d)
     ev.join(sparseWins(ev),
         col("ts") >= col("lo") && col("ts") < col("hi"), "left_anti")
@@ -1729,7 +1729,7 @@ object RelQueries {
     * preserved row exactly once (matched) or once as null-extended
     * (unmatched). Twin: the naive RIGHT theta join. */
   def rangeJoinRightAuto(s: SparkSession, d: String): DataFrame = {
-    graft.plans.RangeJoinRewrite.ensure(s)
+    graft.GraftSession.install(s)
     val ev = Tables.events(s, d)
     val p = ev.filter(col("event_type") === "purchase")
       .select(col("event_id"), col("ts"), col("value"))
@@ -1756,7 +1756,7 @@ object RelQueries {
     * decomposition is linear in rows + matches. Twin: the naive FULL
     * theta join. */
   def rangeJoinFullAuto(s: SparkSession, d: String): DataFrame = {
-    graft.plans.RangeJoinRewrite.ensure(s)
+    graft.GraftSession.install(s)
     // materialized once: the decomposition's three branches each read
     // both sides — the checkpoint turns six parquet scans into one
     // scan plus cheap RDD re-reads (ScanBudget discipline)
@@ -1791,7 +1791,7 @@ object RelQueries {
     * marker — each unmatched window emits exactly once whatever its
     * bin count. Twin: the naive FULL theta join. */
   def rangeJoinFullPit(s: SparkSession, d: String): DataFrame = {
-    graft.plans.RangeJoinRewrite.ensure(s)
+    graft.GraftSession.install(s)
     // materialized once: the decomposition's three branches each read
     // both sides (ScanBudget discipline)
     val ev = Tables.events(s, d)
@@ -1834,7 +1834,7 @@ object RelQueries {
     * either side emits exactly once by its synthetic id. Twin: the
     * naive FULL theta join. */
   def overlapJoinFull(s: SparkSession, d: String): DataFrame = {
-    graft.plans.RangeJoinRewrite.ensure(s)
+    graft.GraftSession.install(s)
     val ev = Tables.events(s, d).localCheckpoint(true)
     val spans = ev.filter(col("user_id") < 20)
       .groupBy(col("user_id"), date_trunc("DAY", col("ts")).as("day"))

@@ -54,17 +54,21 @@ object StreamGrade {
     * [[runToSink]]). */
   private val GradePartitions = "2"
 
-  /** The session whose graded conf window ([[withGradeConf]]) is open:
-    * the members of a family co-schedule run inside it on their own
-    * threads and must not set or restore conf themselves. Set and
-    * cleared under [[gradeLock]]. */
-  @volatile private var openWindow: Option[SparkSession] = None
+  /** The session whose graded conf window ([[withGradeConf]]) is open
+    * on this thread. The members of a family co-schedule and the
+    * concurrent sinks of one graded run work on threads started inside
+    * the window, which inherit it; they must not set or restore conf
+    * themselves, or the last to finish restores the window's value for
+    * good. */
+  private val openWindow = new InheritableThreadLocal[Option[SparkSession]] {
+    override def initialValue(): Option[SparkSession] = None
+  }
 
   /** Run `body` with [[GradePartitions]] shuffle partitions, restoring
     * the prior setting after — or as is, inside `s`'s open window,
     * which already set them. */
   private def withGradePartitions[A](s: SparkSession)(body: => A): A =
-    if (openWindow.exists(_ eq s)) body
+    if (openWindow.get.exists(_ eq s)) body
     else {
       val key = "spark.sql.shuffle.partitions"
       val prior = s.conf.getOption(key)
@@ -78,10 +82,10 @@ object StreamGrade {
     * member sinks inside never touch conf. */
   private def withGradeConf[A](s: SparkSession, rocksdb: Boolean)(body: => A): A =
     withGradePartitions(s) {
-      val outer = openWindow
-      openWindow = Some(s)
+      val outer = openWindow.get
+      openWindow.set(Some(s))
       try { if (rocksdb) withRocksDb(s)(body) else body }
-      finally openWindow = outer
+      finally openWindow.set(outer)
     }
 
   /** GRADE FAMILIES — the multi-sink co-schedule (r9 Next #3): graded
@@ -998,11 +1002,11 @@ object StreamGrade {
       val spark = s; import spark.implicits._
       implicit val ss: SparkSession = s
       // the two gate sinks are independent — run them CONCURRENTLY under
-      // ONE RocksDB window (the multi-sink discipline): the composed
+      // ONE conf window (the multi-sink discipline): the composed
       // pipeline costs one streaming-startup window, not two. The inner
-      // withRocksDb guards pass through on the preset, so neither thread
-      // restores conf or unloads stores while the other sink runs.
-      val (reps, drops) = withRocksDb(s) {
+      // guards pass through inside it, so neither thread restores conf
+      // or unloads stores while the other sink runs.
+      val (reps, drops) = withGradeConf(s, rocksdb = true) {
         val repsF = new java.util.concurrent.FutureTask(() =>
           runToSink(s,
             Streams.firstArrivalPerKey(

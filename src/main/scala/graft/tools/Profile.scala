@@ -1,22 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc profiler: time named queries (2 runs: cold + warm) and print
   * formatted plans. Usage: runMain graft.tools.Profile <sfDir> <name>... */
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = if (args.length > 1) args.tail.toSeq else Seq("cdc_take_n")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local()
     names.foreach { name =>
       val fn = graft.SparkEntry.queries(name)
       if (sys.env.contains("PROFILE_EXPLAIN")) fn(spark, sfDir).explain("formatted")

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Executed-plan parquet-scan counts per graded query (flags avoidable
   * fact re-scans). The counting logic is shared with ScanBudgetSpec,
   * which gates the full catalog against the committed budget file
@@ -27,11 +25,7 @@ object ScanAudit {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .withExtensions(new graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.local()
     val sf = args.headOption.getOrElse("/root/testdata/sf0.001")
     graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {

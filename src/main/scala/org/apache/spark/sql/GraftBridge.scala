@@ -22,29 +22,13 @@ object GraftBridge {
   def ofRows(s: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(s.asInstanceOf[classic.SparkSession], plan)
 
-  /** Idempotently make `strat` visible to the session's planner: a
-    * no-op when [[graft.GraftExtensions]] already injected it, else
-    * appended to `experimental.extraStrategies` (which the planner
-    * consults first). */
-  def ensureStrategy(s: SparkSession, strat: SparkStrategy): Unit = {
+  /** Whether `s` was built with an extension that injects the planner
+    * strategy `strat`: read from the classic session's `private[sql]`
+    * extensions, so what [[graft.GraftSession.install]] appended to
+    * `experimental` never counts. */
+  def injects(s: SparkSession, strat: SparkStrategy): Boolean = {
     val cs = s.asInstanceOf[classic.SparkSession]
-    if (!cs.sessionState.planner.strategies.contains(strat))
-      cs.experimental.extraStrategies =
-        cs.experimental.extraStrategies :+ strat
-  }
-
-  /** Idempotently make an optimizer rule visible to the session (the
-    * [[ensureStrategy]] discipline for optimizations): a no-op when the
-    * rule is already in `experimental.extraOptimizations`; sessions
-    * built with [[graft.GraftExtensions]] additionally carry it in the
-    * operator-optimization batch, where the extra copy finds nothing
-    * left to match (rules self-identify idempotent). */
-  def ensureOptimizerRule(s: SparkSession,
-                          rule: catalyst.rules.Rule[LogicalPlan]): Unit = {
-    val cs = s.asInstanceOf[classic.SparkSession]
-    if (!cs.experimental.extraOptimizations.contains(rule))
-      cs.experimental.extraOptimizations =
-        cs.experimental.extraOptimizations :+ rule
+    cs.extensions.buildPlannerStrategies(cs).contains(strat)
   }
 
   /** An eager local checkpoint WITHOUT origin statistics — the
@@ -76,17 +60,4 @@ object GraftBridge {
     * stock parser otherwise). */
   def parsePlan(s: SparkSession, sqlText: String): LogicalPlan =
     s.asInstanceOf[classic.SparkSession].sessionState.sqlParser.parsePlan(sqlText)
-
-  /** Idempotently register a session function — the
-    * [[ensureStrategy]] discipline for expression builders, letting
-    * SQL surfaces that need an injected function self-install in
-    * sessions built without [[graft.GraftExtensions]]. */
-  def ensureFunction(
-      s: SparkSession,
-      name: org.apache.spark.sql.catalyst.FunctionIdentifier,
-      info: org.apache.spark.sql.catalyst.expressions.ExpressionInfo,
-      builder: Seq[Expression] => Expression): Unit = {
-    val reg = s.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
-    if (!reg.functionExists(name)) reg.registerFunction(name, info, builder)
-  }
 }

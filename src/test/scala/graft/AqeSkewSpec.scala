@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,13 +9,17 @@ import org.scalatest.funsuite.AnyFunSuite
   * deployment runs with BOTH armed — salt for aggregations and the
   * joins you know are skewed, AQE for the ones you discover in
   * production. docs/SCALE.md §"Skew" records the tradeoff. */
-class AqeSkewSpec extends AnyFunSuite {
+class AqeSkewSpec extends AnyFunSuite with SharedSession {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  /** A forced sort-merge join under AQE skew splitting, thresholds at
+    * test-corpus scale. */
+  private val skewConfs = Seq(
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.skewJoin.enabled" -> "true",
+    "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
+    "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "256KB",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "128KB")
 
   test("AQE splits the skewed join partition at runtime; rows identical to the un-split join") {
     val s = spark; import s.implicits._
@@ -31,26 +34,10 @@ class AqeSkewSpec extends AnyFunSuite {
 
     def joined() = fact.join(dim, Seq("k")).select(col("id"), col("label"))
 
-    val conf = spark.conf
-    val saved = Seq(
-      "spark.sql.adaptive.enabled",
-      "spark.sql.adaptive.skewJoin.enabled",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      "spark.sql.autoBroadcastJoinThreshold"
-    ).map(k => k -> scala.util.Try(conf.get(k)).toOption).toMap
-    try {
-      // force a sort-merge join (no broadcast escape hatch), and lower
-      // the skew thresholds to test-corpus scale — at 100 TB the
-      // DEFAULTS (256 MB threshold, 5x median) fire on real skew
-      conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      conf.set("spark.sql.adaptive.enabled", "true")
-      conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-      conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-      conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "256KB")
-      conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "128KB")
-
+    // force a sort-merge join (no broadcast escape hatch), and lower
+    // the skew thresholds to test-corpus scale — at 100 TB the
+    // DEFAULTS (256 MB threshold, 5x median) fire on real skew
+    withConf(skewConfs: _*) {
       val df = joined()
       val withAqe = df.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
       val plan = df.queryExecution.executedPlan.toString
@@ -59,13 +46,11 @@ class AqeSkewSpec extends AnyFunSuite {
 
       // correctness is non-negotiable: the split must be a pure physical
       // rewrite, identical to the same join with AQE off
-      conf.set("spark.sql.adaptive.enabled", "false")
-      val without = joined().collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+      val without = withConf("spark.sql.adaptive.enabled" -> "false") {
+        joined().collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+      }
       assert(withAqe === without)
       assert(withAqe.length === 60000)
-    } finally saved.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None) => conf.unset(k)
     }
   }
 
@@ -73,7 +58,6 @@ class AqeSkewSpec extends AnyFunSuite {
        "skew-split by AQE at runtime — the composition the rewrite " +
        "exists to enable, since a BNLJ can never be skew-split") {
     val s = spark; import s.implicits._
-    graft.plans.RangeJoinRewrite.ensure(spark)
     // 99% of points land in ONE stats-derived bin (the [0.5, 1) hot
     // hour); the interval side covers it with one fat interval among
     // 37 cold ones — so the binned equi join's shuffle has one huge
@@ -88,22 +72,7 @@ class AqeSkewSpec extends AnyFunSuite {
     def q() = pts.join(ivs, col("v") >= col("lo") && col("v") < col("hi"))
       .select(col("id"), col("iid"))
 
-    val conf = spark.conf
-    val saved = Seq(
-      "spark.sql.adaptive.enabled",
-      "spark.sql.adaptive.skewJoin.enabled",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      "spark.sql.autoBroadcastJoinThreshold"
-    ).map(k => k -> scala.util.Try(conf.get(k)).toOption).toMap
-    try {
-      conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ
-      conf.set("spark.sql.adaptive.enabled", "true")
-      conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-      conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-      conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "256KB")
-      conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "128KB")
+    withConf(skewConfs: _*) {
       val df = q()
       val withAqe = df.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
       val plan = df.queryExecution.executedPlan.toString
@@ -114,16 +83,12 @@ class AqeSkewSpec extends AnyFunSuite {
         s"the binned join's hot partition was not skew-split:\n$plan")
       // physical rewrite only: rows identical to the un-split,
       // un-rewritten nested loop
-      conf.set("spark.sql.adaptive.enabled", "false")
-      conf.set(graft.plans.RangeJoinRewrite.EnabledKey, "false")
-      try {
+      withConf("spark.sql.adaptive.enabled" -> "false",
+               graft.plans.RangeJoinRewrite.EnabledKey -> "false") {
         val naive = q().collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
         assert(withAqe === naive)
         assert(withAqe.length === 60000)
-      } finally conf.unset(graft.plans.RangeJoinRewrite.EnabledKey)
-    } finally saved.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None) => conf.unset(k)
+      }
     }
   }
 }

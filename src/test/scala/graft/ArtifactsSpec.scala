@@ -6,20 +6,12 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One test per clause of the [[Artifacts]] rule: once-only builds,
   * nested builds, fingerprint revalidation, context end, and the
   * least-recently-used session bound. */
-class ArtifactsSpec extends AnyFunSuite {
-
-  private def spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ArtifactsSpec extends AnyFunSuite with SharedSession {
 
   /** A data dir holding one input table `t` of `n` bytes. */
   private def dataDir(n: Int): Path = {
@@ -50,7 +42,7 @@ class ArtifactsSpec extends AnyFunSuite {
 
   test("a build that itself looks up other artifacts neither throws nor deadlocks") {
     val d = dataDir(1).toString
-    val s = spark
+    val s = session()
     val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     def outer(): Int = Artifacts.session(s, "spec.outer", d, "t") {
@@ -68,7 +60,7 @@ class ArtifactsSpec extends AnyFunSuite {
   test("a fingerprint change rebuilds and releases the replaced value") {
     val dir = dataDir(1)
     val d = dir.toString
-    val s = spark
+    val s = session()
     val builds = new AtomicInteger
     def held(): Held = Artifacts.session(s, "spec.stale", d, "t")(
       new Held(builds.incrementAndGet()))
@@ -83,7 +75,7 @@ class ArtifactsSpec extends AnyFunSuite {
 
   test("a fifth live session releases the least recently used one") {
     val d = dataDir(1).toString
-    val base = spark
+    val base = session()
     val sessions = (1 to Artifacts.MaxSessions + 1).map(_ => base.newSession())
     val held = sessions.zipWithIndex.map { case (s, i) =>
       Artifacts.session(s, "spec.lru", d, "t")(new Held(i))
@@ -96,14 +88,14 @@ class ArtifactsSpec extends AnyFunSuite {
 
   test("stopping a session drops its entries") {
     val d = dataDir(1).toString
-    val s = spark
+    val s = session()
     val h = Artifacts.session(s, "spec.stop", d, "t")(new Held(0))
     assert(Artifacts.sessionEntries(s) > 0)
     s.stop()
     assert(Artifacts.sessionEntries(s) === 0)
     // a stopped context's values are dropped, not released into it
     assert(!h.closed)
-    val next = spark
+    val next = session()
     assert(next ne s)
     assert(Artifacts.session(next, "spec.stop", d, "t")(new Held(1)).id === 1)
   }

@@ -2,7 +2,7 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -18,19 +18,7 @@ import graft.rel.RelQueries
   * executed plan shape (one exchange + one sort per side, no window, no
   * join fan-out), API error modes, and strategy self-registration in a
   * session built without GraftExtensions. */
-class AsOfJoinSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
-
-  lazy val spark: SparkSession = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    SparkSession.builder()
-      .master("local[4]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
+class AsOfJoinSpec extends AnyFunSuite with SharedSession with AdaptiveSparkPlanHelper {
 
   private val sfDir = "/root/testdata/sf0.001"
 
@@ -495,14 +483,6 @@ class AsOfJoinSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       Seq(("x", "x")))
   }
 
-  private def withConfs[A](confs: (String, String)*)(body: => A): A = {
-    val priors = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally priors.foreach { case (k, p) =>
-      p.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
-  }
-
   // 90% of probes on key 1; times deterministic, right times unique
   // (so tie-breaks cannot differ between plans under comparison)
   private def hotLeft = spark.range(0, 20000, 1, 4).select(
@@ -517,7 +497,7 @@ class AsOfJoinSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   test("honest skew contract: OptimizeSkewedJoin splits a skewed SMJ but NOT " +
       "the custom as-of shuffle — the scaladoc's claim, pinned") {
     import org.apache.spark.sql.execution.adaptive.AQEShuffleReadExec
-    withConfs(
+    withConf(
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1.0",
@@ -664,27 +644,13 @@ class AsOfJoinSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   test("self-registers its strategy in a session without GraftExtensions") {
-    spark // force the fixture first so restoring defaults below is safe
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val plain = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    try {
+    withPlainSession { plain =>
       val a = plain.range(0, 10).select(col("id").as("k"), (col("id") * 10).as("t"))
       val b = plain.range(0, 5).select(col("id").as("rk"), (col("id") * 10 - 5).as("rt"))
       val out = AsOf.join(a, b, Seq("k"), Seq("rk"), "t", "rt")
       // rk=k has rt=10k-5 <= t=10k for k in 0..4; keys 5..9 have no right row
       val rows = out.collect()
       assert(rows.length == 10 && rows.count(!_.isNullAt(2)) == 5)
-    } finally {
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      SparkSession.setDefaultSession(spark)
-      SparkSession.setActiveSession(spark)
     }
   }
 }

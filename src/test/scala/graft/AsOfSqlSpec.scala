@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.catalyst.parser.ParseException
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
@@ -17,19 +17,7 @@ import graft.plans.{AsOf, AsOfForward, AsOfJoinExec, AsOfSqlRewrite,
   * rewritten) and every loud-error mode (no ON, USING, unsupported join
   * kinds, non-as-of shapes — a marker must never silently degrade to a
   * plain left join). */
-class AsOfSqlSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
-
-  lazy val spark: SparkSession = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    SparkSession.builder()
-      .master("local[4]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
+class AsOfSqlSpec extends AnyFunSuite with SharedSession with AdaptiveSparkPlanHelper {
 
   private def mkViews(): Unit = {
     import scala.jdk.CollectionConverters._
@@ -208,11 +196,10 @@ class AsOfSqlSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       "ON l.k = r.rk AND r.rt <= l.t"
     val (m1, b1) = asofExecs(spark.sql(q))
     assert(b1 === 1 && m1 === 0, "tiny right side must take the broadcast exec")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val (m2, b2) = asofExecs(spark.sql(q))
       assert(m2 === 1 && b2 === 0, "threshold -1 must take the co-partitioned merge")
-    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    }
   }
 
   test("inner ASOF JOIN drops unmatched probes; strict and forward inequalities map") {
@@ -283,14 +270,13 @@ class AsOfSqlSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   test("join-strategy hints steer the ASOF physical path: BROADCAST(r) beats a " +
       "disabled threshold, MERGE(r) beats a tiny-side estimate") {
     mkViews()
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val hinted = spark.sql(
         "SELECT /*+ BROADCAST(r) */ l.lp, r.rp FROM lv l ASOF LEFT JOIN rv r " +
           "ON l.k = r.rk AND r.rt <= l.t")
       val (m, b) = asofExecs(hinted)
       assert(b === 1 && m === 0, "BROADCAST(r) hint must force the broadcast exec")
-    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    }
     val merged = spark.sql(
       "SELECT /*+ MERGE(r) */ l.lp, r.rp FROM lv l ASOF LEFT JOIN rv r " +
         "ON l.k = r.rk AND r.rt <= l.t")
@@ -370,16 +356,7 @@ class AsOfSqlSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   test("AsOfSql self-installs in a session without GraftExtensions") {
-    spark // force the fixture first so restoring defaults below is safe
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val plain = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    try {
+    withPlainSession { plain =>
       plain.range(0, 10).select(col("id").as("k"), (col("id") * 10).as("t"))
         .createOrReplaceTempView("pa")
       plain.range(0, 5).select(col("id").as("rk"), (col("id") * 10 - 5).as("rt"))
@@ -401,11 +378,6 @@ class AsOfSqlSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
           "SELECT * FROM pa a ASOF LEFT JOIN pb b " +
             "ON (a.k = b.rk AND b.rt <= a.t) OR a.k = 99").collect()
       }
-    } finally {
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      SparkSession.setDefaultSession(spark)
-      SparkSession.setActiveSession(spark)
     }
   }
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The bucketed co-located join's plan contract: with auto-broadcast
@@ -8,14 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * sort-merge join with ZERO Exchange — each task reads bucket i of
   * both sides. The raw-parquet form of the same join MUST show an
   * Exchange (the assertion is not vacuous). */
-class BucketedJoinSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .withExtensions(new GraftExtensions)
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BucketedJoinSpec extends AnyFunSuite with SharedSession {
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -28,9 +20,7 @@ class BucketedJoinSpec extends AnyFunSuite {
        "tables; the raw-parquet twin of the same join shuffles") {
     import org.apache.spark.sql.functions._
     val s = spark
-    val prior = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val full = executed(graft.rel.Bucketed.bucketedJoin(s, sf))
       // the AQE dump appends the pre-adaptive "Initial Plan" — only the
       // Final Plan is what executed
@@ -58,7 +48,7 @@ class BucketedJoinSpec extends AnyFunSuite {
       val rawJoinIdx = raw.indexOf("SortMergeJoin")
       assert(rawJoinIdx >= 0 && raw.substring(rawJoinIdx).contains("Exchange"),
         s"raw join did not shuffle — the bucketed assertion proves nothing:\n$raw")
-    } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
+    }
   }
 
   test("bucketed tables are reused across invocations and rebuilt for a " +
@@ -121,22 +111,20 @@ class BucketedJoinSpec extends AnyFunSuite {
     s.sql(s"DROP TABLE graft_bkt_orders_$fp")
     assert(marker.exists(), "DROP TABLE deleted an external location")
     val a0 = graft.rel.Warehouse.adopted.get()
+    // a new session (its own SQL conf) stands in for a restarted JVM
     val s2 = s.newSession()
-    val prior = s2.conf.get("spark.sql.autoBroadcastJoinThreshold")
     s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val df = graft.rel.Bucketed.bucketedJoin(s2, sf)
-      assert(df.collect().toSeq === expect,
-        "adopted bucketed tables answered differently")
-      assert(graft.rel.Warehouse.adopted.get() === a0 + 2,
-        "restart did not adopt the surviving bucketed tables")
-      assert(marker.lastModified() === mtime,
-        "adoption rewrote the bucketed files")
-      val plan = df.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==").head
-      val joinIdx = plan.indexOf("SortMergeJoin")
-      assert(joinIdx >= 0 && !plan.substring(joinIdx).contains("Exchange"),
-        s"adopted bucketed join re-shuffled:\n$plan")
-    } finally s2.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
+    val df = graft.rel.Bucketed.bucketedJoin(s2, sf)
+    assert(df.collect().toSeq === expect,
+      "adopted bucketed tables answered differently")
+    assert(graft.rel.Warehouse.adopted.get() === a0 + 2,
+      "restart did not adopt the surviving bucketed tables")
+    assert(marker.lastModified() === mtime,
+      "adoption rewrote the bucketed files")
+    val plan = df.queryExecution.executedPlan.toString
+      .split("== Initial Plan ==").head
+    val joinIdx = plan.indexOf("SortMergeJoin")
+    assert(joinIdx >= 0 && !plan.substring(joinIdx).contains("Exchange"),
+      s"adopted bucketed join re-shuffled:\n$plan")
   }
 }

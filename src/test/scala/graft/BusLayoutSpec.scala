@@ -2,21 +2,13 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.BusLayout
 
 /** Partitioned bus layout: routing filters become partition pruning. */
-class BusLayoutSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BusLayoutSpec extends AnyFunSuite with SharedSession {
 
   test("event_type filter prunes partitions at the scan") {
     val dir = Files.createTempDirectory("graft_layout").toString

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,14 +9,7 @@ import graft.sources.Capture
 
 /** CSV / JSON-lines capture round-trips: schema-explicit reads preserve
   * every row, every type, and microsecond event time. */
-class CaptureSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CaptureSpec extends AnyFunSuite with SharedSession {
 
   private def fingerprint(df: org.apache.spark.sql.DataFrame) =
     df.agg(

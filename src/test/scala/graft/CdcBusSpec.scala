@@ -3,7 +3,6 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.cdc.CdcBus
@@ -12,14 +11,7 @@ import graft.cdc.CdcBus
   * bus (FIXTURES.md §B.3/§B.4): take(n) delivers exactly min(n, matches);
   * RPC first-wins picks the earliest response across response patterns;
   * counters count only matching deliveries. */
-class CdcBusSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CdcBusSpec extends AnyFunSuite with SharedSession {
 
   /** 10 events: 6 signup (match for take-n), interleaved error/purchase
     * for rpc ordering, one view. Mirrors events.parquet's schema. */

@@ -2,21 +2,13 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.cdc.{Graft, MqttPattern}
 
 /** Seeded randomized invariants (SURVEY §5.2.3) checked against a
   * brute-force in-memory model of the reference semantics. */
-class CdcPropertySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CdcPropertySpec extends AnyFunSuite with SharedSession {
 
   private val rnd = new scala.util.Random(2024)
   private val types = Seq("click", "view", "error", "signup", "purchase")

@@ -8,7 +8,7 @@ import graft.nats.CdcProto.CdcMsg
 /** The hand-rolled CDCMsg wire codec (reference lib/nats.js:88-90):
   * encode∘decode identity on randomized envelopes, proto3 default
   * omission, unknown-field skipping, and the Catalyst expression path. */
-class CdcProtoSpec extends AnyFunSuite {
+class CdcProtoSpec extends AnyFunSuite with SharedSession {
 
   private val rnd = new scala.util.Random(7)
   private def rndString(): String = {
@@ -86,15 +86,6 @@ class CdcProtoSpec extends AnyFunSuite {
   }
 
   test("decode_cdc_msg expression decodes inside SQL (codegen path)") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // getOrCreate may return a shared suite session built without
-    // extensions — register the functions directly either way
-    graft.functions.GraftFunctions.register(spark)
     val s = spark; import s.implicits._
     val msgs = (1L to 50L).map(i =>
       CdcMsg(s"pub$i", s"cdc/click/$i", "json", "http", "", (i % 3).toInt,

@@ -1,20 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.cdc.Graft
 
 /** The user-facing facade: every reference API verb maps onto a working
   * view of the shared bus scan. */
-class GraftFacadeSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class GraftFacadeSpec extends AnyFunSuite with SharedSession {
 
   private lazy val bus = Graft.connect(spark, "/root/testdata/sf0.001")
 

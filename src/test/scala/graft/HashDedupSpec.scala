@@ -3,7 +3,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.llm.HashDedup
@@ -11,14 +10,7 @@ import graft.llm.HashDedup
 /** Near-dup semantics on synthetic documents with KNOWN duplicates — the
   * sf testdata has few near-dups, so the detection paths are proven here
   * (FIXTURES.md §B): exact copies, one-word edits, unrelated docs. */
-class HashDedupSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class HashDedupSpec extends AnyFunSuite with SharedSession {
 
   /** documents.parquet layout with: 0/1 exact copies, 2 a one-word edit of
     * them, 3/4 unrelated, 5 another near-copy of 0 (two words changed). */
@@ -145,7 +137,6 @@ class HashDedupSpec extends AnyFunSuite {
 
   test("winnow_fps / band_hashes are SQL-registered: ANSI text == column API") {
     import org.apache.spark.sql.functions.col
-    graft.functions.GraftFunctions.register(spark)
     graft.Tables.documents(spark, dir).createOrReplaceTempView("docs_sqlfn")
     val sqlSide = spark.sql(
       "SELECT doc_id, winnow_fps(text) AS w, band_hashes(text) AS b FROM docs_sqlfn")

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,21 +10,7 @@ import graft.functions.GraftFunctions.mqtt_matches
 /** The MqttPrefixPushdown optimizer rule: rewrite correctness + the fact
   * that the derived prefix actually reaches the parquet scan as a pushed
   * filter (row-group skipping — the 100 TB story). */
-class MqttPushdownSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    // other suites may have built a session without extensions; getOrCreate
-    // would silently return it, so force a fresh one (suites run serially).
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    SparkSession.builder()
-      .master("local[4]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
+class MqttPushdownSpec extends AnyFunSuite with SharedSession {
 
   private lazy val busDir: String = {
     val dir = Files.createTempDirectory("graft_bus").toString

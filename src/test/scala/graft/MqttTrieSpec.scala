@@ -9,7 +9,7 @@ import graft.cdc.{MqttPattern, MqttTrie}
   * matches(patterns(i), topic). Randomized over the full pattern grammar
   * (literals, '+', named '+', terminal bare/named '#', empty levels,
   * dead mid-'#' patterns, duplicates in the set). */
-class MqttTrieSpec extends AnyFunSuite {
+class MqttTrieSpec extends AnyFunSuite with SharedSession {
 
   test("hand cases: bare vs named '#', empty levels, dead mid-'#', duplicates") {
     val pats = Seq(
@@ -74,12 +74,6 @@ class MqttTrieSpec extends AnyFunSuite {
   }
 
   test("matchCounts through the trie equals per-pattern filter counts (SQL level)") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     val d = "/root/testdata/sf0.001"
     val bus = Tables.bus(spark, d)
     val pats = Seq("cdc/#", "cdc/error/#", "cdc/+/1", "cdc/nosuch/#", "cdc/+e/#r")
@@ -93,7 +87,6 @@ class MqttTrieSpec extends AnyFunSuite {
     assert(viaTrie === viaFilter)
 
     // SQL surface: mqtt_dispatch with an ARRAY<STRING> literal
-    graft.functions.GraftFunctions.register(spark)
     bus.createOrReplaceTempView("graft_trie_bus_v")
     val viaSql = spark.sql(
       """SELECT pi, count(*) AS hits

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,13 +10,7 @@ import graft.llm.Multimodal
 /** pHash sizing behavior: the graded 16-bit/4-bit sizing vs the
   * production 64-bit/16-bit sizing, and the cap divergence point the
   * mirrored oracle guards (ADVICE r6). */
-class MultimodalSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class MultimodalSpec extends AnyFunSuite with SharedSession {
 
   private val sf = "/root/testdata/sf0.01"
 

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,14 +12,7 @@ import graft.nats.{CdcProto, InMemoryBroker, NatsSource, UnavailableBroker}
   * micro-batches, the range is sharded round-robin across partitions, and
   * every frame's protobuf envelope decodes through CdcProto — then the
   * graft operators (mqtt routing, counters) apply unchanged on top. */
-class NatsSourceSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class NatsSourceSpec extends AnyFunSuite with SharedSession {
 
   private def msg(i: Long): CdcProto.CdcMsg = {
     val types = Seq("click", "view", "error", "signup")

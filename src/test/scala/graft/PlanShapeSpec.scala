@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,19 +11,7 @@ import graft.cdc.CdcBus
   * side; take(n) must plan TakeOrderedAndProject, not a global sort).
   * These assert the EXECUTED plan, so a Catalyst upgrade or a refactor
   * that silently degrades the plan fails loudly here. */
-class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
-
-  lazy val spark: SparkSession = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    SparkSession.builder()
-      .master("local[4]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
+class PlanShapeSpec extends AnyFunSuite with SharedSession with AdaptiveSparkPlanHelper {
 
   private val sfDir = "/root/testdata/sf0.001"
 
@@ -73,11 +60,8 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     // pin the plan: no AQE re-planning, no size-based auto-broadcast (the
     // dimension broadcast is the explicit hint; at the graded sf
     // EVERYTHING is broadcastable, which would hide the ordering)
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConf("spark.sql.adaptive.enabled" -> "false",
+             "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       for (name <- Seq("q3_shipping", "q5_region", "q7_volume", "q8_share", "q9_profit")) {
         val df = graft.rel.RelQueries.queries(name)(spark, sfDir)
         val exec = df.queryExecution.executedPlan
@@ -100,9 +84,6 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
           s"$name: a broadcast join consumes the fact-fact join output — " +
             s"the dimension filter applies AFTER the big shuffle:\n$exec")
       }
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
     }
   }
 
@@ -138,11 +119,8 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   test("q17_small_qty: every join is broadcast — the fact table never shuffles") {
     import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec, SortMergeJoinExec}
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConf("spark.sql.adaptive.enabled" -> "false",
+             "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val df = graft.rel.RelQueries.queries("q17_small_qty")(spark, sfDir)
       val exec = df.queryExecution.executedPlan
       // the per-part average is a ≤|brand parts| aggregate broadcast back
@@ -153,9 +131,6 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       }
       assert(shuffleJoins.isEmpty,
         s"q17: correlated-average join-back shuffles the fact table:\n$exec")
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
     }
   }
 
@@ -615,9 +590,7 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.functions._
     val s = spark; import s.implicits._
-    val prior = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       // the exact frames corenessOf's round consumes: sym PERSISTED
       // clustered by the lookup key v, labels node-partitioned by the
       // degree agg
@@ -654,6 +627,6 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
               s"an Exchange re-shuffles the persisted adjacency:\n$exec")
           }
       } finally { sym.unpersist(true); () }
-    } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
+    }
   }
 }

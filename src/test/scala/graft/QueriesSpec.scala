@@ -8,14 +8,7 @@ import graft.llm.Multimodal
 /** Invariant checks of the graded query catalog on sf0.001 (the DuckDB
   * hash-compare itself is driver-side; these assert semantic invariants
   * and keep every query executable). */
-class QueriesSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class QueriesSpec extends AnyFunSuite with SharedSession {
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -1766,7 +1759,6 @@ class QueriesSpec extends AnyFunSuite {
     }.map(_._1)
     assert(byDtw === byL2, "DTW ranking diverged from L2 on aligned fixtures")
     // the SQL surface: registered builder, plan-time-specialized grid
-    graft.functions.GraftFunctions.register(spark)
     assert(spark.sql(
       "SELECT dtw_band(array(0L, 10L, 0L), array(10L, 0L, 0L), 3, 1) AS d")
       .head().getLong(0) === 10L)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,19 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * nested-loop-free AND row-identical to the naive plan it replaces;
   * the rule must stand down on an equi conjunct; the stats-derived bin
   * width is pinned on adversarial corpora. */
-class RangeJoinRewriteSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
-
-  lazy val spark: SparkSession = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    SparkSession.builder()
-      .master("local[4]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
+class RangeJoinRewriteSpec extends AnyFunSuite with SharedSession with AdaptiveSparkPlanHelper {
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -33,11 +21,8 @@ class RangeJoinRewriteSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private def naiveRows(df: => DataFrame): Seq[String] =
     withDisabled { df.collect().map(_.toString).sorted.toSeq }
 
-  private def withDisabled[A](body: => A): A = {
-    spark.conf.set(graft.plans.RangeJoinRewrite.EnabledKey, "false")
-    try body
-    finally spark.conf.unset(graft.plans.RangeJoinRewrite.EnabledKey)
-  }
+  private def withDisabled[A](body: => A): A =
+    withConf(graft.plans.RangeJoinRewrite.EnabledKey -> "false")(body)
 
   private def executedPlan(df: DataFrame): String = {
     df.collect() // finalize adaptive re-planning before inspecting

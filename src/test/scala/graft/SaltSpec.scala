@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,13 +7,7 @@ import graft.rel.Salt
 
 /** Salting must be a pure physical rewrite: identical results to the
   * naive aggregation/join on heavily skewed data (90% one key). */
-class SaltSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SaltSpec extends AnyFunSuite with SharedSession {
 
   private lazy val skewed = {
     val s = spark; import s.implicits._

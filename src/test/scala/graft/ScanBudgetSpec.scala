@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Scan-count ratchet over the FULL graded catalog: every query's
@@ -11,14 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * this spec closes the class: a refactor cannot re-introduce one
   * anywhere in the catalog without editing the budget file in the same
   * commit. Queries absent from the file budget at ONE scan per table. */
-class ScanBudgetSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ScanBudgetSpec extends AnyFunSuite with SharedSession {
 
   private val sf = "/root/testdata/sf0.001"
   private val budgetFile = java.nio.file.Paths.get("tools/scan_budget.tsv")

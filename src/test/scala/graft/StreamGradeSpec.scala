@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.state.StateStore
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -15,7 +14,7 @@ import graft.stream.StreamGrade
   * cross-batch state (running counters, the retained cache's revisions,
   * the SCD2 open version riding ValueState over a batch boundary) is
   * actually exercised — not one batch in disguise. */
-class StreamGradeSpec extends AnyFunSuite with BeforeAndAfterAll {
+class StreamGradeSpec extends AnyFunSuite with SharedSession with BeforeAndAfterAll {
 
   private val dir = "/root/testdata/sf0.001"
 
@@ -23,13 +22,6 @@ class StreamGradeSpec extends AnyFunSuite with BeforeAndAfterAll {
     StateStore.stop()
     super.afterAll()
   }
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().toSeq.map(_.toString)
@@ -329,7 +321,11 @@ class StreamGradeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("doc_stream_pipeline: the composed live gates (rep claim + near-dup + length) " +
       "== the batch pipeline_kept audit") {
+    val ambient = spark.conf.get("spark.sql.shuffle.partitions")
     val got = rows(StreamGrade.streamPipeline(spark, dir))
+    // its two concurrent sinks share one conf window: neither restores
+    // the other's setting, so the ambient one comes back
+    assert(spark.conf.get("spark.sql.shuffle.partitions") === ambient)
     assert(StreamGrade.batchCount("stream_pipe_pairs") === 3)
     val want = rows(graft.llm.HashDedup.queries("pipeline_kept")(spark, dir))
     assert(got.nonEmpty && got === want)
@@ -478,8 +474,7 @@ class StreamGradeSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("a graded run outside a family window restores ambient shuffle partitions, " +
       "also when they equal the grade's own 2") {
     val key = "spark.sql.shuffle.partitions"
-    val prior = spark.conf.getOption(key)
-    try {
+    withConf(key -> "2") {
       for (ambient <- Seq("2", "7")) {
         spark.conf.set(key, ambient)
         // one member alone, outside any window
@@ -493,6 +488,6 @@ class StreamGradeSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(spark.conf.get(key) === "2")
       StreamGrade.queries("cdc_stream_rpc_outer")(spark, dir).collect()
       assert(spark.conf.get(key) === "2")
-    } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
   }
 }

@@ -15,7 +15,7 @@ import graft.stream.Streams.BusEvent
 /** Structured-Streaming semantics the DuckDB oracle cannot grade:
   * windowed aggregation under a watermark, late-data drop, and the
   * stateful take(n) gate (FIXTURES.md §B.5). */
-class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
+class StreamingSpec extends AnyFunSuite with SharedSession with BeforeAndAfterAll {
 
   /** Unload every loaded state-store provider and stop the maintenance
     * thread before the suite exits: the RocksDB provider's native
@@ -27,13 +27,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     super.afterAll()
   }
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
   private def ts(min: Int): Timestamp = new Timestamp(1704067200000L + min * 60000L) // 2024-01-01 UTC
 
   private def ev(id: Long, min: Int, user: Long, typ: String): BusEvent =
@@ -43,14 +36,9 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     * transformWithState) to `body`, restoring the prior provider after —
     * the rest of the suite (and later suites sharing the JVM-wide
     * session) stays on the default provider. */
-  private def withRocksDbProvider[A](body: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prior = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
+  private def withRocksDbProvider[A](body: => A): A =
+    withConf("spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body)
 
   test("tumbling window counts on a bounded stream match batch semantics") {
     implicit val sq = spark.sqlContext

@@ -1,19 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.TopKAggregator
 
 /** The typed top-k Aggregator: partial-per-partition + merge equals the
   * brute-force answer (no global sort involved). */
-class TopKAggregatorSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TopKAggregatorSpec extends AnyFunSuite with SharedSession {
 
   test("top-3 across many partitions matches brute force, ties by id") {
     val s = spark; import s.implicits._

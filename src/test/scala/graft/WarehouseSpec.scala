@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[graft.rel.Warehouse]]'s stale-sibling sweep — the unbounded-growth
@@ -16,14 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * refreshes on every ensureTable hit, vetoing the sweep. (The
   * adopt / never-delete-complete-locations contract itself is pinned
   * by BucketedJoinSpec and the coreness persistence spec.) */
-class WarehouseSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class WarehouseSpec extends AnyFunSuite with SharedSession {
 
   private val srcDir = "/graft/testdata/whspec"
 

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,13 +13,7 @@ import graft.sources.ZOrder
   * dimension overlaps only a fraction of the files (file-level min/max
   * pruning — the same mechanism BusLayoutSpec proves for partition
   * columns, here for multi-dimensional clustering). */
-class ZOrderSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ZOrderSpec extends AnyFunSuite with SharedSession {
 
   test("interleave matches hand-computed Morton codes") {
     import spark.implicits._

@@ -10,32 +10,24 @@ import jdk.jfr.consumer.RecordingFile
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{AbstractFileSystem, FileContext, FileStatus, FileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.execution.streaming.state.StateStore
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SharedSession
 import graft.stream.Streams
 import graft.stream.Streams.BusEvent
 
 /** The spawn-free `file:` pair: a streaming checkpoint forks no shell,
   * the overridden calls answer as the stock `RawLocalFileSystem` does,
   * and a deployment's own `file:` implementation wins. */
-class LocalFsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class LocalFsSpec extends AnyFunSuite with SharedSession with BeforeAndAfterAll {
 
   override def afterAll(): Unit = {
     StateStore.stop()
     super.afterAll()
   }
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .withExtensions(new graft.GraftExtensions)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private def tmpDir(prefix: String): JPath = {
     val d = Files.createTempDirectory(prefix)
@@ -73,14 +65,13 @@ class LocalFsSpec extends AnyFunSuite with BeforeAndAfterAll {
       "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
       "fs.file.impl.disable.cache" -> "true")
-    val prior = scoped.map { case (k, v) => val p = spark.conf.getOption(k); spark.conf.set(k, v); k -> p }
     val ckpt = tmpDir("graft_localfs_ckpt_").toUri.toString
     assert(ckpt.startsWith("file:/"))
     def ev(id: Long, min: Int) =
       BusEvent(id, new java.sql.Timestamp(1704067200000L + min * 60000L), 1L, "click", 1.0, "{}")
     val in = MemoryStream[BusEvent]
     var batches = 0L
-    val spawns = try spawnsDuring {
+    val spawns = withConf(scoped: _*) { try spawnsDuring {
       // the recording sees spawns: one deliberate, outside Hadoop
       new ProcessBuilder("true").start().waitFor()
       val q = Streams.dedupStream(Streams.withChannel(in.toDF()))
@@ -91,10 +82,7 @@ class LocalFsSpec extends AnyFunSuite with BeforeAndAfterAll {
           .foreach { rows => in.addData(rows: _*); q.processAllAvailable() }
         batches = q.recentProgress.count(_.numInputRows > 0L)
       } finally q.stop()
-    } finally {
-      prior.foreach { case (k, p) => p.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
-      StateStore.stop()
-    }
+    } finally StateStore.stop() }
     assert(batches === 3L)
     assert(spark.table("localfs_dedup").count() === 4L)
     assert(spawns.exists(_.trim == "true"), spawns)

@@ -4,12 +4,14 @@ import java.nio.charset.StandardCharsets.US_ASCII
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SharedSession
+
 /** The live TCP layer: the embedded [[NatsServer]] speaking the public
   * text protocol over real loopback sockets, the [[TcpChannel]]-backed
   * [[TcpBroker]] dial, and the full socket → protocol → DataSourceV2 →
   * query loop. Everything here runs over actual TCP connections — this
   * closes the one seam NatsWireSpec drives with in-memory channels. */
-class NatsTcpSpec extends AnyFunSuite {
+class NatsTcpSpec extends AnyFunSuite with SharedSession {
 
   import NatsWire._
 
@@ -417,12 +419,6 @@ class NatsTcpSpec extends AnyFunSuite {
 
   test("FULL TCP loop: executor-side PUB over sockets → embedded server → " +
       "readStream on the default broker → routing parity with the in-memory bus") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     import org.apache.spark.sql.functions._
     import graft.functions.GraftFunctions.mqtt_matches
 
@@ -452,12 +448,6 @@ class NatsTcpSpec extends AnyFunSuite {
 
   test("multi-subscription workload: wildcard matrix + queue group + UNSUB-max delivery " +
       "counts over real sockets equal the batch matchCounts on the same slice") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     import org.apache.spark.sql.functions._
 
     // deterministic slice of the real bus table; every channel has
@@ -529,12 +519,6 @@ class NatsTcpSpec extends AnyFunSuite {
   test("CONCURRENT wire clients: 8 parallel publishers + 5 subscribers (plain + " +
       "queue group) interleave frames over real sockets; aggregate delivery " +
       "counts equal batch matchCounts") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     import org.apache.spark.sql.functions._
 
     val slice = graft.Tables.bus(spark, "/root/testdata/sf0.001")
@@ -613,12 +597,6 @@ class NatsTcpSpec extends AnyFunSuite {
   }
 
   test("Graft.live: the reference's connect-by-url over the short-name source") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     val server = new NatsServer()
     try {
       // new NATS({url}) → a streaming Bus on the live transport; the url

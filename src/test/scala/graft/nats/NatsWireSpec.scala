@@ -4,12 +4,14 @@ import java.nio.charset.StandardCharsets.US_ASCII
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SharedSession
+
 /** The NATS text-protocol codec (the dialogue the reference's nats client
   * speaks at lib/nats.js:62-64): framing round-trips, incremental parsing
   * at every byte boundary, binary payloads containing CRLF, and the full
   * connection dialogue of [[TextProtocolBroker]] against an in-memory
   * channel — zero sockets. */
-class NatsWireSpec extends AnyFunSuite {
+class NatsWireSpec extends AnyFunSuite with SharedSession {
 
   import NatsWire._
 
@@ -289,12 +291,6 @@ class NatsWireSpec extends AnyFunSuite {
 
   test("wire bytes → protocol → readStream: the reference pub→broker→sub loop " +
       "end-to-end (NatsWire framing under the DataSourceV2)") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     val server = new ScriptedServer
     WireTestBroker.underlying = new TextProtocolBroker {
       override protected def dial(): NatsChannel = server
@@ -342,12 +338,6 @@ class NatsWireSpec extends AnyFunSuite {
     // them in the partitioned storage layout, and the re-read must
     // route (mqtt patterns) and count (per-sub counters) exactly like
     // an in-memory frame of the same envelopes.
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     import org.apache.spark.sql.functions._
     import graft.functions.GraftFunctions.mqtt_matches
 
