@@ -27,10 +27,10 @@ object VectorOps {
     * custom expression (identical fold order to `aggregate(zip_with(..))`
     * and to DuckDB's `list_dot_product`, but compiled; the interpreted
     * higher-order form was the hot path of every similarity query). */
-  private def dot(a: Column, b: Column): Column =
+  private[graft] def dot(a: Column, b: Column): Column =
     graft.functions.GraftFunctions.dot_product(a, b)
 
-  private def vecs(s: SparkSession, d: String): DataFrame =
+  private[graft] def vecs(s: SparkSession, d: String): DataFrame =
     vecsOf(Tables.embeddings(s, d))
 
   /** The vecs normal form (double vector + its norm²) over an arbitrary
@@ -40,7 +40,7 @@ object VectorOps {
     raw.withColumn("v", col("embedding").cast("array<double>"))
       .withColumn("n2", dot(col("v"), col("v")))
 
-  private val NQueries = 5
+  private[graft] val NQueries = 5
   private val TopK = 5
 
   /** Brute-force exact cosine top-k for query vectors vec_id < 5. */
@@ -1072,12 +1072,7 @@ object VectorOps {
   /** PQ code assignment over an explicit vector frame — the form
     * [[appendIvfPq]] needs, where the frame is a delta slice encoded
     * against a FROZEN codebook rather than the whole snapshot. */
-  /** Spec hook: the code-assignment lineage over an explicit frame +
-    * codebook (what a maintenance op writes for its delta). */
-  private[graft] def pqCodesOfForSpec(vecFrame: DataFrame, cents: DataFrame): DataFrame =
-    pqCodesOf(vecFrame, cents)
-
-  private def pqCodesOf(vecFrame: DataFrame, cents: DataFrame): DataFrame = {
+  private[graft] def pqCodesOf(vecFrame: DataFrame, cents: DataFrame): DataFrame = {
     val e = vecFrame.select(col("vec_id"), col("label"), col("v"))
     val w = Window.partitionBy(col("vec_id"), col("subspace"))
       .orderBy(col("d2"), col("cell"))
@@ -1966,7 +1961,7 @@ object VectorOps {
   /** MMR selection depth and the λ=0.7 relevance/diversity trade,
     * carried as INTEGERS (7/10 and 3/10 against 10⁶-quantized cosines)
     * so every MMR score is an exact BIGINT. */
-  private val MmrK = 5
+  private[graft] val MmrK = 5
 
   /** MMR RE-RANK — the stage after hybrid retrieval in a production RAG
     * pipeline (Carbonell & Goldstein, SIGIR 1998): [[rrfFusion]]'s
@@ -2084,31 +2079,6 @@ object VectorOps {
       }
       .toDF("qid", "rank", "doc_id", "mmr_q")
       .orderBy(col("qid"), col("rank"))
-  }
-
-  /** Spec hook: the PURE-RELEVANCE top-[[MmrK]] picks per query over
-    * the fused candidates (what λ=1 MMR would select) — the diversity
-    * spec asserts the actual MMR order differs somewhere. Driver-side
-    * map bounded by |queries|. */
-  private[graft] def relevanceTop5ForSpec(
-      s: SparkSession, d: String): Map[Long, Seq[Long]] = {
-    val fused = rrfFusion(s, d).select(col("qid"), col("doc_id"))
-    val e = vecs(s, d).select(col("vec_id"), col("v"), col("n2"))
-    val q = e.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("qid"), col("v").as("qv"), col("n2").as("qn2"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("rel_q").desc, col("doc_id"))
-    fused.join(e, col("vec_id") === col("doc_id"))
-      .join(broadcast(q), Seq("qid"))
-      .withColumn("rel_q",
-        floor(lit(1e6d) * dot(col("qv"), col("v"))
-          / (sqrt(col("qn2")) * sqrt(col("n2")))).cast("long"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= MmrK)
-      .select(col("qid"), col("rn"), col("doc_id"))
-      .collect()
-      .groupBy(_.getLong(0))
-      .map { case (k, rows) =>
-        k -> rows.sortBy(_.getInt(1)).map(_.getLong(2)).toSeq }
   }
 
   /** Cross-modal mix audit — the one query here that JOINS the text and

@@ -66,13 +66,6 @@ object RangeJoin {
     else widthFromStats(row.getLong(0), row.getLong(1))
   }
 
-  /** [[pointInInterval]] with the width stats-derived from `intervals`
-    * ([[deriveBinSeconds]]). */
-  def pointInIntervalAuto(points: DataFrame, pointTs: String,
-                          intervals: DataFrame, lo: String, hi: String): DataFrame =
-    pointInInterval(points, pointTs, intervals, lo, hi,
-      deriveBinSeconds(intervals, lo, hi))
-
   /** [[intervalOverlap]] with the width stats-derived from BOTH sides'
     * pooled interval lengths. */
   def intervalOverlapAuto(left: DataFrame, leftLo: String, leftHi: String,

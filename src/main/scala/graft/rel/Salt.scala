@@ -6,18 +6,17 @@ import org.apache.spark.sql.functions._
 /** Skew-handling primitives: deterministic salting for hot keys.
   *
   * Spark's hash aggregation already combines map-side, and AQE splits
-  * skewed JOIN partitions at runtime — these helpers cover the cases left:
-  * a reduction whose single hot key overwhelms one reducer even after
+  * skewed JOIN partitions at runtime — this covers the case left: a
+  * reduction whose single hot key overwhelms one reducer even after
   * partial aggregation (very high-cardinality per-key state, e.g.
-  * collect-style aggs), and a shuffle join against a side AQE can't
-  * broadcast where one key dominates.
+  * collect-style aggs).
   *
   * Salt is derived deterministically (`pmod(hash(saltFrom), buckets)`)
   * so retries/speculative tasks reproduce the same assignment.
   */
 object Salt {
 
-  private def saltCol(saltFrom: Column, buckets: Int): Column =
+  private[graft] def saltCol(saltFrom: Column, buckets: Int): Column =
     pmod(hash(saltFrom), lit(buckets))
 
   /** Two-phase salted sum/count per key: partial by (key, salt) spreads a
@@ -29,16 +28,4 @@ object Salt {
       .agg(sum(col(value)).as("_s"), count(lit(1)).as("_c"))
       .groupBy(col(key))
       .agg(sum(col("_s")).as("total"), sum(col("_c")).as("n"))
-
-  /** Salted equi-join: the big (skewed) side gets a deterministic per-row
-    * salt; the small side is replicated across all salt values, so every
-    * hot-key row joins against a replica on its own reducer. Result is
-    * row-identical to the plain join. */
-  def saltedJoin(big: DataFrame, small: DataFrame, key: String,
-                 saltFrom: String, buckets: Int = 16): DataFrame = {
-    val bigS = big.withColumn("_salt", saltCol(col(saltFrom), buckets))
-    val smallS = small.withColumn("_salt",
-      explode(sequence(lit(0), lit(buckets - 1))))
-    bigS.join(smallS, Seq(key, "_salt")).drop("_salt")
-  }
 }

@@ -26,17 +26,6 @@ object BusLayout {
   def readPartitioned(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
 
-  /** Write the bus partitioned by its first TWO routing levels — the
-    * deeper layout for buses whose dominant patterns pin level 3
-    * (`cdc/error/login/#`-shaped): [[graft.plans.BusPartitionPruning]]
-    * derives one implied predicate per literal level, so BOTH directory
-    * levels prune before a row is read. Choose the second key by
-    * cardinality: hive layouts want at most a few thousand directories
-    * per parent. */
-  def writePartitioned2(bus: DataFrame, path: String,
-                        second: String = "user_id"): Unit =
-    bus.write.partitionBy("event_type", second).mode("overwrite").parquet(path)
-
   /** Compact a partitioned capture — the small-files problem: a
     * long-running streaming capture leaves one file per (micro-batch ×
     * task) in every partition directory, and scan/open overhead

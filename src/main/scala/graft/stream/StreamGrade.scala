@@ -107,7 +107,7 @@ object StreamGrade {
   private val families: Seq[(Set[String], Boolean)] = Seq(
     // bus replay, no transformWithState (default state provider)
     (Set("cdc_stream_counters", "cdc_stream_retained", "cdc_stream_tumbling",
-         "cdc_stream_sliding", "cdc_stream_sessions", "cdc_stream_dedup",
+         "cdc_stream_sliding", "cdc_stream_sessions",
          "cdc_stream_enrich", "cdc_stream_asof", "cdc_stream_capture",
          "cdc_stream_ts_sim", "cdc_stream_dtw"), false),
     // bus replay, transformWithState (RocksDB)
@@ -115,7 +115,7 @@ object StreamGrade {
          "cdc_stream_take", "cdc_stream_user_features",
          "cdc_stream_asof_join", "cdc_stream_ivm",
          "cdc_stream_ivm_minmax", "cdc_stream_ivm_distinct",
-         "cdc_stream_ivm_join"), true),
+         "cdc_stream_ivm_join", "cdc_stream_dedup"), true),
     // bus replay, stream-stream interval joins
     (Set("cdc_stream_rpc_join", "cdc_stream_rpc_outer"), false),
     // document-crawl replay (mixed: the TWS members need RocksDB; the
@@ -648,18 +648,18 @@ object StreamGrade {
   /** STREAMING exact-dedup under at-least-once REDELIVERY, graded: the
     * replay overlaps each slice 2 days back, so the transport delivers
     * the previous slice's tail AGAIN (~thousands of duplicate frames);
-    * [[Streams.dedupStream]]'s watermark-bounded
-    * `dropDuplicatesWithinWatermark` must restore exactly-once before
-    * the aggregate — the DuckDB twin computes from the parquet, which
-    * never had duplicates, so any frame counted twice (or dropped)
-    * breaks the hash. The overlap sits INSIDE the 2-day allowed
-    * lateness, so duplicates are absorbed by dedup STATE, not by the
-    * late-row filter. */
+    * [[Streams.dedupStream]]'s watermark-bounded gate must restore
+    * exactly-once before the aggregate — the DuckDB twin computes from
+    * the parquet, which never had duplicates, so any frame counted twice
+    * (or dropped) breaks the hash. The overlap sits INSIDE the 2-day
+    * allowed lateness, so duplicates are absorbed by dedup STATE, not by
+    * the late-row filter. The gate is a `transformWithState` (RocksDB). */
   def streamDedup(s: SparkSession, d: String): DataFrame =
     withBusStream(s, d, overlapDays = 2) { busStream =>
-      val once = runToSink(s,
-        Streams.dedupStream(busStream, watermark = "2 days"),
-        "append", "stream_dedup")
+      val once = withRocksDb(s) {
+        runToSink(s, Streams.dedupStream(busStream, watermark = "2 days"),
+          "append", "stream_dedup")
+      }
       once.groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
              countDistinct(col("user_id")).as("n_users"),

@@ -2,8 +2,13 @@ package graft.stream
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.{AgnosticEncoders, ExpressionEncoder, RowEncoder}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils.instantToMicros
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
 import org.apache.spark.sql.streaming.{ListState, MapState, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
 import graft.functions.GraftFunctions.mqtt_matches
@@ -66,10 +71,189 @@ object Streams {
       .select(col("session_window.start").as("s_start"),
               col("session_window.end").as("s_end"), col("user_id"), col("n"))
 
-  /** Streaming exact-dedup bounded by the watermark. */
-  def dedupStream(bus: DataFrame, watermark: String = "10 minutes"): DataFrame =
+  /** Streaming exact-dedup bounded by the watermark: the rows of
+    * `bus.withWatermark("ts", watermark).dropDuplicatesWithinWatermark("event_id")`,
+    * same late-row drop, same schema, `ts` still the watermark column.
+    * The ids are held by a [[DedupGate]] per shard,
+    * `pmod(xxhash64(event_id), DedupShards)`, so a micro-batch reads and
+    * writes each touched shard's state once instead of calling the store
+    * per row. `event_id` must be LONG. Needs the RocksDB state store
+    * provider (`transformWithState`); a checkpoint of the former
+    * `dropDuplicatesWithinWatermark` plan cannot be resumed. */
+  def dedupStream(bus: DataFrame, watermark: String = "10 minutes"): DataFrame = {
+    val schema = bus.schema
+    val idType = schema.find(_.name == "event_id").map(_.dataType)
+    require(idType.contains(LongType),
+      s"dedupStream needs a LONG event_id column, got ${idType.fold("none")(_.sql)}")
+    val rows = instantRows(schema)
     bus.withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark("event_id")
+      .groupBy(pmod(xxhash64(col("event_id")), lit(DedupShards)).as("shard"))
+      .as[Long, Row](Encoders.scalaLong, rows)
+      .transformWithState(new DedupGate(intervalMs(watermark),
+          schema.fieldIndex("event_id"), schema.fieldIndex("ts")),
+        "ts", OutputMode.Append())(rows)
+  }
+
+  /** Shards of [[dedupStream]]'s gate. */
+  private val DedupShards = 16
+  /** Most (id, expiry) pairs one state entry of the gate holds. */
+  private val DedupEntryPairs = 2048
+
+  /** `RowEncoder` of `schema` whose top-level timestamps are `Instant`s,
+    * so the gate reads a row's event time without `java.sql.Timestamp`'s
+    * calendar rebase. */
+  private def instantRows(schema: StructType): Encoder[Row] = {
+    val AgnosticEncoders.RowEncoder(fields) = RowEncoder.encoderFor(schema): @unchecked
+    ExpressionEncoder(AgnosticEncoders.RowEncoder(fields.map { f =>
+      if (f.enc == AgnosticEncoders.STRICT_TIMESTAMP_ENCODER)
+        f.copy(enc = AgnosticEncoders.STRICT_INSTANT_ENCODER)
+      else f
+    }))
+  }
+
+  /** [[dedupStream]]'s gate over one shard of ids. State: a map of
+    * entries keyed by (expiry bucket, chunk); each value packs at most
+    * [[DedupEntryPairs]] `(id, expiry)` longs, expiry = first-seen event
+    * time + delay in micros, as Spark's operator keeps it. A bucket spans
+    * a quarter of the delay (at least a second), so most entries expire
+    * whole and are removed without a rewrite; only the one or two the
+    * watermark cuts are filtered and written back.
+    *
+    * A call reads the shard's entries once, passes each row whose id is
+    * not held, evicts every pair the eviction watermark has reached and
+    * writes back only the entries it changed: new ids fill their bucket's
+    * last chunk, then new chunks. One timer per shard sits at its
+    * earliest remaining expiry, so an idle shard evicts at the end of
+    * the first batch whose watermark reaches it, as Spark's operator
+    * does. A null id is held as the pair `(0, expiry)` in the entry
+    * [[DedupGate.NullEntry]]. */
+  private[stream] final class DedupGate(delayMs: Long, idAt: Int, tsAt: Int)
+      extends StatefulProcessor[Long, Row, Row] {
+    import DedupGate._
+    @transient private var entries: MapState[Long, Array[Byte]] = _
+    private val delayUs = delayMs * 1000L
+    private val bucketUs = math.max(delayUs / 4, 1000000L)
+
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      entries = getHandle.getMapState[Long, Array[Byte]]("ids",
+        Encoders.scalaLong, Encoders.BINARY, TTLConfig.NONE)
+
+    override def handleInputRows(shard: Long, rows: Iterator[Row],
+                                 timerValues: TimerValues): Iterator[Row] = {
+      val held = load()
+      val seen = new mutable.LongMap[Null](2 * held.valuesIterator.map(_.length / 2).sum + 16)
+      held.foreachEntry { (k, p) =>
+        if (k != NullEntry) { var i = 0; while (i < p.length) { seen(p(i)) = null; i += 2 } }
+      }
+      var nullHeld = held.contains(NullEntry)
+      var nullAdded = Long.MinValue
+      val added = mutable.LongMap.empty[mutable.ArrayBuilder.ofLong]
+      val out = mutable.ArrayBuffer.empty[Row]
+      rows.foreach { r =>
+        // a null event time reads as 0, as in Spark's operator
+        val ts = r.getAs[java.time.Instant](tsAt)
+        val e = (if (ts == null) 0L else instantToMicros(ts)) + delayUs
+        val fresh =
+          if (r.isNullAt(idAt)) !nullHeld && { nullHeld = true; nullAdded = e; true }
+          else {
+            val id = r.getLong(idAt)
+            !seen.contains(id) && {
+              seen(id) = null
+              added.getOrElseUpdate(Math.floorDiv(e, bucketUs), new mutable.ArrayBuilder.ofLong)
+                .addOne(id).addOne(e)
+              true
+            }
+          }
+        if (fresh) out += r
+      }
+      if (nullHeld && !held.contains(NullEntry))
+        added(NullBucket) = new mutable.ArrayBuilder.ofLong().addOne(0L).addOne(nullAdded)
+      store(held, added, timerValues.getCurrentWatermarkInMs(), -1L)
+      out.iterator
+    }
+
+    override def handleExpiredTimer(shard: Long, timerValues: TimerValues,
+        expiredTimerInfo: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[Row] = {
+      store(load(), mutable.LongMap.empty, timerValues.getCurrentWatermarkInMs(),
+        expiredTimerInfo.getExpiryTimeInMs())
+      Iterator.empty
+    }
+
+    private def load(): mutable.LongMap[Array[Long]] = {
+      val held = mutable.LongMap.empty[Array[Long]]
+      entries.iterator().foreach { case (k, v) =>
+        val p = new Array[Long](v.length / 8)
+        java.nio.ByteBuffer.wrap(v).asLongBuffer().get(p)
+        held(k) = p
+      }
+      held
+    }
+
+    /** Evict the pairs `wmMs` has reached from `held` (plus a null id's
+      * entry added this call), add the live `added` pairs, write what
+      * changed and re-arm the shard's timer; `firing` is the timer being
+      * handled, which Spark deletes itself. */
+    private def store(held: mutable.LongMap[Array[Long]],
+                      added: mutable.LongMap[mutable.ArrayBuilder.ofLong],
+                      wmMs: Long, firing: Long): Unit = {
+      val wmUs = wmMs * 1000L
+      val live = mutable.LongMap.empty[Array[Long]]
+      val dirty = mutable.Set.empty[Long]
+      var earliest = Long.MaxValue
+      def keep(k: Long, p: Array[Long], changed: Boolean): Unit = {
+        var i = 1; while (i < p.length) { earliest = math.min(earliest, p(i)); i += 2 }
+        live(k) = p
+        if (changed) dirty += k
+      }
+      def unexpired(p: Array[Long]): Array[Long] = {
+        val b = new mutable.ArrayBuilder.ofLong
+        var i = 0
+        while (i < p.length) { if (p(i + 1) > wmUs) b.addOne(p(i)).addOne(p(i + 1)); i += 2 }
+        b.result()
+      }
+      held.foreachEntry { (k, p) =>
+        val q = unexpired(p)
+        if (q.nonEmpty) keep(k, q, q.length != p.length)
+      }
+      added.foreachEntry { (bucket, b) =>
+        val p = unexpired(b.result())
+        var chunk = live.keysIterator.filter(k => (k >> ChunkBits) == bucket)
+          .map(k => (k & ChunkMask).toInt).maxOption.getOrElse(0)
+        var at = 0
+        while (at < p.length) {
+          val k = (bucket << ChunkBits) | chunk
+          val cur = live.getOrElse(k, Array.emptyLongArray)
+          val n = math.min(2 * DedupEntryPairs - cur.length, p.length - at)
+          if (n == 0) chunk += 1
+          else { keep(k, cur ++ p.slice(at, at + n), changed = true); at += n }
+        }
+      }
+      held.keysIterator.filterNot(live.contains).foreach(entries.removeKey)
+      dirty.foreach { k =>
+        val p = live(k)
+        val v = new Array[Byte](p.length * 8)
+        java.nio.ByteBuffer.wrap(v).asLongBuffer().put(p)
+        entries.updateValue(k, v)
+      }
+      val want = if (live.isEmpty) Nil else List(Math.floorDiv(earliest + 999L, 1000L))
+      val armed = getHandle.listTimers().toList
+      if (armed != want) {
+        armed.filter(_ != firing).foreach(getHandle.deleteTimer)
+        want.foreach(getHandle.registerTimer)
+      }
+    }
+  }
+
+  private[stream] object DedupGate {
+    /** Entry key bits of the chunk number; the bucket takes the rest. A
+      * bucket is at least a second of expiry, so the bucket of any
+      * timestamp Spark holds (years 1-9999) fits, far from [[NullBucket]]. */
+    val ChunkBits = 20
+    val ChunkMask: Long = (1L << ChunkBits) - 1
+    /** The bucket, and so the entry, of a null id. */
+    val NullBucket: Long = Long.MinValue >> ChunkBits
+    val NullEntry: Long = NullBucket << ChunkBits
+  }
 
   /** The reference's RPC combinator (lib/nats.js:196-256) in streaming
     * form: a watermarked stream-stream interval join — a response matches

@@ -136,7 +136,10 @@ class MqttPushdownSpec extends AnyFunSuite with SharedSession {
   test("BusPartitionPruning: a level-3 literal pattern prunes BOTH directory " +
       "levels of the two-level layout") {
     val dir = Files.createTempDirectory("graft_rule_prune2").toString
-    graft.sources.BusLayout.writePartitioned2(
+    // the two-level hive layout: event_type, then user_id
+    val writeTwoLevel = (bus: org.apache.spark.sql.DataFrame, path: String) =>
+      bus.write.partitionBy("event_type", "user_id").mode("overwrite").parquet(path)
+    writeTwoLevel(
       Tables.events(spark, "/root/testdata/sf0.001"), dir)
     val re = graft.sources.BusLayout.readPartitioned(spark, dir)
       .withColumn("channel", concat_ws("/",

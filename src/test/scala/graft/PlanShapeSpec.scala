@@ -495,7 +495,13 @@ class PlanShapeSpec extends AnyFunSuite with SharedSession with AdaptiveSparkPla
       "src-partitioned layout — no Exchange ever consumes it") {
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    val step = graft.rel.RelQueries.graphIterStepForSpec(spark, sfDir)
+    import org.apache.spark.sql.functions.lit
+    // one un-checkpointed iterate step over the memoized prep
+    val q = graft.rel.RelQueries
+    val prep = q.purchaseGraph(spark, sfDir)
+    val step = q.graphIterStep(prep.ew, prep.nodes,
+      prep.nodes.withColumn("r", lit(q.GraphScale)).localCheckpoint(true),
+      lit(15L * q.GraphScale / 100L))
     step.collect() // finalize adaptive re-planning
     val exec = step.queryExecution.executedPlan
     // the persisted edge frame must appear (the prep cached it)...

@@ -486,7 +486,8 @@ class RangeJoinRewriteSpec extends AnyFunSuite with SharedSession with AdaptiveS
     val wins = ev.select(date_trunc("DAY", col("ts")).as("day")).distinct()
       .select(col("day"), (col("day") + expr("INTERVAL 10 HOURS")).as("lo"),
         (col("day") + expr("INTERVAL 14 HOURS")).as("hi"))
-    val auto = RangeJoin.pointInIntervalAuto(ev, "ts", wins, "lo", "hi")
+    val auto = RangeJoin.pointInInterval(ev, "ts", wins, "lo", "hi",
+        RangeJoin.deriveBinSeconds(wins, "lo", "hi"))
       .select(col("event_id"), col("day")).collect().map(_.toString).sorted.toSeq
     val naive = ev.join(wins, col("ts") >= col("lo") && col("ts") < col("hi"))
       .select(col("event_id"), col("day"))

@@ -53,7 +53,10 @@ class SaltSpec extends AnyFunSuite with SharedSession {
       .toDF("k", "label")
     val naive = skewed.join(dim, Seq("k")).select(col("id"), col("label"))
       .collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
-    val salted = Salt.saltedJoin(skewed, dim, "k", "id")
+    // the big (skewed) side gets a deterministic per-row salt; the small
+    // side is replicated across all 16 salt values
+    val salted = skewed.withColumn("_salt", Salt.saltCol(col("id"), 16))
+      .join(dim.withColumn("_salt", explode(sequence(lit(0), lit(15)))), Seq("k", "_salt"))
       .select(col("id"), col("label"))
       .collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
     assert(salted === naive)

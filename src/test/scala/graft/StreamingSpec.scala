@@ -1473,9 +1473,11 @@ class StreamingSpec extends AnyFunSuite with SharedSession with BeforeAndAfterAl
     import spark.implicits._
     val in = MemoryStream[BusEvent]
     in.addData(ev(1, 0, 1, "click"), ev(1, 0, 1, "click"), ev(2, 1, 1, "view"))
-    val q = Streams.dedupStream(Streams.withChannel(in.toDF()))
-      .writeStream.outputMode("append").format("memory").queryName("deduped").start()
-    q.processAllAvailable(); q.stop()
+    withRocksDbProvider {
+      val q = Streams.dedupStream(Streams.withChannel(in.toDF()))
+        .writeStream.outputMode("append").format("memory").queryName("deduped").start()
+      q.processAllAvailable(); q.stop()
+    }
     assert(spark.table("deduped").count() === 2)
   }
 }

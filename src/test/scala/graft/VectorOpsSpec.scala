@@ -10,6 +10,31 @@ class VectorOpsSpec extends AnyFunSuite with SharedSession {
 
   private val sf = "/root/testdata/sf0.001"
 
+  /** The PURE-RELEVANCE top-`MmrK` picks per query over the fused
+    * candidates (what λ=1 MMR would select): the diversity spec asserts
+    * the actual MMR order differs somewhere. */
+  private def relevanceTop5(s: org.apache.spark.sql.SparkSession, d: String): Map[Long, Seq[Long]] = {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+    val fused = VectorOps.rrfFusion(s, d).select(col("qid"), col("doc_id"))
+    val e = VectorOps.vecs(s, d).select(col("vec_id"), col("v"), col("n2"))
+    val q = e.filter(col("vec_id") < VectorOps.NQueries)
+      .select(col("vec_id").as("qid"), col("v").as("qv"), col("n2").as("qn2"))
+    val w = Window.partitionBy(col("qid")).orderBy(col("rel_q").desc, col("doc_id"))
+    fused.join(e, col("vec_id") === col("doc_id"))
+      .join(broadcast(q), Seq("qid"))
+      .withColumn("rel_q",
+        floor(lit(1e6d) * VectorOps.dot(col("qv"), col("v"))
+          / (sqrt(col("qn2")) * sqrt(col("n2")))).cast("long"))
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= VectorOps.MmrK)
+      .select(col("qid"), col("rn"), col("doc_id"))
+      .collect()
+      .groupBy(_.getLong(0))
+      .map { case (k, rows) =>
+        k -> rows.sortBy(_.getInt(1)).map(_.getLong(2)).toSeq }
+  }
+
   test("ann_ivf: 3 ranked results per query, deterministic across runs") {
     val a = VectorOps.annIvf(spark, sf).collect()
     val b = VectorOps.annIvf(spark, sf).collect()
@@ -456,7 +481,7 @@ class VectorOpsSpec extends AnyFunSuite with SharedSession {
     val deleted = delIds.collect().map(_.getLong(0)).toSet
     val after = spark.read.parquet(s"$store/codes")
       .collect().map(_.toString).toSet
-    val expectDelta = graft.llm.VectorOps.pqCodesOfForSpec(delta,
+    val expectDelta = graft.llm.VectorOps.pqCodesOf(delta,
         spark.read.parquet(s"$store/centroids"))
       .collect().map(_.toString).toSet
     val expect = before.filterNot { row =>
@@ -608,7 +633,7 @@ class VectorOpsSpec extends AnyFunSuite with SharedSession {
     // on this corpus and the operator is untested)
     val mmrPicks = byQ.map { case (q, rows) =>
       q -> rows.sortBy(_.getLong(1)).map(_.getLong(2)).toSeq }
-    val relTop = VectorOps.relevanceTop5ForSpec(spark, sf)
+    val relTop = relevanceTop5(spark, sf)
     assert(mmrPicks.exists { case (q, picks) => relTop.get(q).exists(_ != picks) },
       "MMR selection identical to pure relevance on every query — " +
         "diversity term never fired")
