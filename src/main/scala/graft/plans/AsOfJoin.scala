@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{AnalysisException, DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, GraftBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{
   Ascending, Attribute, BindReferences, Expression, GenericInternalRow,
@@ -142,7 +142,7 @@ case class AsOfJoin(
   * without the extensions. */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case j @ AsOfJoin(l, r, lk, rk, lt, rt, tol, dir, hint, exact) =>
+    case AsOfJoin(l, r, lk, rk, lt, rt, tol, dir, hint, exact) =>
       val threshold =
         org.apache.spark.sql.internal.SQLConf.get.autoBroadcastJoinThreshold
       val bcast = hint.getOrElse(
@@ -787,7 +787,7 @@ object AsOf {
                           allowExactMatches: Boolean = true): DataFrame = {
     require(buckets > 0, s"need a positive bucket count, got $buckets")
     import org.apache.spark.sql.functions.{
-      broadcast, col, expr, lit, max_by, min_by, row_number, struct}
+      broadcast, col, expr, max_by, min_by, row_number, struct}
     val bcol = "__graft_asof_bucket"
     val tcol = "__graft_asof_tlong"
     Seq(bcol, tcol).foreach { n =>

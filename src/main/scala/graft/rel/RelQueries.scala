@@ -1636,7 +1636,7 @@ object RelQueries {
     * derived from the band lengths (sound without float slack — IEEE
     * division is monotone, so bin(p) is sandwiched between bin(lo) and
     * bin(hi) whenever lo ≤ p ≤ hi; see
-    * [[RangeJoin.pointInIntervalNumeric]]). Twin: the naive theta
+    * [[RangeJoin.ValueBins]]). Twin: the naive theta
     * join. The asymmetric band distinguishes this from
     * [[bandJoinAuto]]'s |l−r| ≤ eps shape: intervals here are DATA
     * (per-row bounds), not a constant radius. */
@@ -2944,7 +2944,7 @@ object RelQueries {
     * iteration therefore moves only the |N|-row rank frame to meet the
     * cached edge partitioning — the in-memory form of bucketing the
     * edges by `src`, which is the identical plan an on-disk deployment
-    * gets from [[graft.sources.Bucketing]]. The rank checkpoint is the
+    * gets from a `bucketBy(src)` table. The rank checkpoint is the
     * standard iterative-graph discipline (GraphX/Pregel do the same
     * materialization).
     *
@@ -3713,40 +3713,6 @@ object RelQueries {
            min(col("node")).as("min_node"), max(col("node")).as("max_node"))
       .orderBy(col("n_members").desc, col("community"))
 
-  /** Exact-integer partition-quality statistics of one labeling of
-    * the co-order graph — the [[graphModularity]] kernel, private
-    * [[graft]] for the hand-graph spec. Newman modularity is
-    * Q = Σ_c [e_c/m − (d_c/2m)²]; publishing Q itself would put a
-    * float in the hash, so the row carries the exact INTEGER
-    * numerator `q_num = 4m²·Q = 4·m·Σe_c − Σd_c²` beside its three
-    * integer ingredients (m, intra-edge count, Σ per-part
-    * degree-sum²) — the graph_converged discipline: grade the
-    * mechanism through integer sums the twin reproduces bit-for-bit.
-    * Scalar attaches are two 1-row aggregate frames crossed — the
-    * repo's broadcast scalar pattern, never a data-sized cartesian. */
-  private[graft] def modularityStats(edges: DataFrame, labels: DataFrame,
-                                     tag: String): DataFrame = {
-    val lab = labels.toDF("node", "part")
-    val eL = edges
-      .join(lab.select(col("node").as("u"), col("part").as("pu")), Seq("u"))
-      .join(lab.select(col("node").as("v"), col("part").as("pv")), Seq("v"))
-    val mIntra = eL.agg(
-      count(lit(1)).as("m"),
-      sum(when(col("pu") === col("pv"), 1L).otherwise(0L)).as("intra_edges"))
-    val degSq = edges.select(col("u").as("node"))
-      .unionByName(edges.select(col("v").as("node")))
-      .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-      .join(lab, Seq("node"))
-      .groupBy(col("part")).agg(sum(col("deg")).as("dc"))
-      .agg(count(lit(1)).as("n_parts"),
-           sum(col("dc") * col("dc")).as("sum_deg_sq"))
-    mIntra.crossJoin(degSq).select(
-      lit(tag).as("scheme"), col("n_parts"), col("m"), col("intra_edges"),
-      col("sum_deg_sq"),
-      (lit(4L) * col("m") * col("intra_edges") - col("sum_deg_sq"))
-        .as("q_num"))
-  }
-
   /** COMMUNITY-QUALITY AUDIT (`graph_modularity`, r15 VERDICT Next
     * #7): the exact-integer modularity numerator of TWO partitions of
     * the co-order graph, published side by side — the converged LPA
@@ -3760,7 +3726,8 @@ object RelQueries {
     * must reproduce every integer bit-for-bit. */
   def graphModularity(s: SparkSession, d: String): DataFrame = {
     // r17 (§2.4 remove redundant passes): the two per-scheme
-    // [[modularityStats]] calls each joined the edge frame with their
+    // statistics calls (their form lives on as the spec's
+    // graft.rel.Modularity) each joined the edge frame with their
     // labeling twice and re-derived the SAME degree frame — six passes
     // over the 2M-edge frame and four edge-sized exchanges. Both label
     // maps now attach in ONE edge pass (full-outer label union keyed by

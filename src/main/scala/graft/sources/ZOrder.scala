@@ -35,18 +35,4 @@ object ZOrder {
     (0 until Bits).map { i =>
       s"((($x >> $i) & 1) << ${2 * i}) | ((($y >> $i) & 1) << ${2 * i + 1})"
     }.mkString("(", ") | (", ")")
-
-  /** Z-clustered write: range-partition by the Morton code and sort each
-    * partition by it, so every output parquet file covers a compact
-    * rectangle of the (x, y) key space and its min/max column stats
-    * prune range predicates on EITHER dimension (ZOrderSpec proves the
-    * pruning on the files this writes). The range exchange is the one
-    * shuffle; sortWithinPartitions never spills more than a partition. */
-  def writeClustered(df: org.apache.spark.sql.DataFrame, path: String,
-                     x: String, y: String, files: Int = 8): Unit =
-    df.withColumn("zval", interleave(col(x), col(y)))
-      .repartitionByRange(files, col("zval"))
-      .sortWithinPartitions("zval")
-      .drop("zval")
-      .write.mode("overwrite").parquet(path)
 }

@@ -716,7 +716,6 @@ object StreamGrade {
     * row an online ranker would read after the final batch. */
   def streamUserFeatures(s: SparkSession, d: String): DataFrame =
     withBusStream(s, d) { busStream =>
-      val spark = s; import spark.implicits._
       implicit val ss: SparkSession = s
       val feats = withRocksDb(s) {
         runToSink(s, Streams.userFeaturesStream(busStream).toDF(),
@@ -850,7 +849,6 @@ object StreamGrade {
     * so the live gate loses no pair the batch audit would find. */
   def streamNearDup(s: SparkSession, d: String): DataFrame =
     withDocStream(s, d) { docStream =>
-      val spark = s; import spark.implicits._
       implicit val ss: SparkSession = s
       val pairs = withRocksDb(s) {
         runToSink(s,
@@ -875,7 +873,6 @@ object StreamGrade {
     * to the hash gate. */
   def streamVocabNovelty(s: SparkSession, d: String): DataFrame =
     withDocStream(s, d) { docStream =>
-      val spark = s; import spark.implicits._
       implicit val ss: SparkSession = s
       val first = withRocksDb(s) {
         runToSink(s, Streams.vocabNoveltyStream(docStream).toDF(),

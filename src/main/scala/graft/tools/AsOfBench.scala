@@ -55,7 +55,6 @@ object AsOfBench {
         lit(null).cast("date").as("c_day"))
       val w = Window.partitionBy(col("k")).orderBy(col("t"), col("kind"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val carried = payload.zip(Seq("click_id", "t", "c_value", "c_props", "c_day"))
       cSide.unionByName(pSide)
         .withColumn("o_click_id", last(col("click_id"), ignoreNulls = true).over(w))
         .withColumn("o_cts", last(when(col("kind") === 0, col("t")), ignoreNulls = true).over(w))

@@ -216,10 +216,10 @@ class AsOfJoinSpec extends AnyFunSuite with SharedSession with AdaptiveSparkPlan
       .select(col("lp"), col("rp")).collect().map(r => (r.getString(0), r.getString(1))).toMap
     assert(gotF == expectedF)
     // nearest = argmin gap over the two directional candidates, tie backward
-    val expectedN = lRows.map { case (k, t, lp) =>
+    val expectedN = lRows.map { case (_, t, lp) =>
       val b = expected(lp); val f = expectedF(lp)
-      val bT = rRows.collectFirst { case (rk, rt, rp) if rp == b => rt }
-      val fT = rRows.collectFirst { case (rk, rt, rp) if rp == f => rt }
+      val bT = rRows.collectFirst { case (_, rt, rp) if rp == b => rt }
+      val fT = rRows.collectFirst { case (_, rt, rp) if rp == f => rt }
       val pick = (bT, fT) match {
         case (Some(bt), Some(ft)) =>
           if (t.longValue() - bt.longValue() <= ft.longValue() - t.longValue()) b else f

@@ -293,7 +293,6 @@ class HashDedupSpec extends AnyFunSuite with SharedSession {
   }
 
   test("incremental_neardup equals the cross-split slice of minhash_pairs on the unioned corpus") {
-    import org.apache.spark.sql.functions._
     for (sf <- Seq("/root/testdata/sf0.001", dir)) {
       val bkt = (id: Long) => {
         val hex = java.security.MessageDigest.getInstance("MD5")
@@ -351,7 +350,6 @@ class HashDedupSpec extends AnyFunSuite with SharedSession {
   test("band store freshness: load revalidates the snapshot fingerprint and fails fast " +
       "on a rebuilt snapshot or a fingerprint-less store") {
     import org.apache.spark.sql.functions._
-    val s = spark; import s.implicits._
     // private copy of the fixture corpus — this test mutates its snapshot
     val snap = Files.createTempDirectory("graft_snap_fresh").toString
     spark.read.parquet(s"$dir/documents.parquet")
@@ -561,7 +559,7 @@ class HashDedupSpec extends AnyFunSuite with SharedSession {
       "incremental_neardup" -> (d => HashDedup.incrementalNearDup(spark, d)))
     val graded = Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")
     var expected = 0
-    for (dir <- graded; (name, q) <- capped) {
+    for (dir <- graded; (_, q) <- capped) {
       q(dir).count()
       expected += 1
     }
@@ -778,7 +776,6 @@ class HashDedupSpec extends AnyFunSuite with SharedSession {
        "shared prefix shingles were CAPPED — the r14 ADVICE corpus " +
        "(identical docs whose two rarest prefix shingles sit in " +
        "over-cap groups) keeps the pair instead of silently dropping it") {
-    import org.apache.spark.sql.functions._
     import java.nio.file.Files
     val s = spark; import s.implicits._
     // X (doc 1) and Y (doc 2): identical 15-word docs → 13 shingles

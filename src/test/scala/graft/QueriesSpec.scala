@@ -778,7 +778,6 @@ class QueriesSpec extends AnyFunSuite with SharedSession {
 
   test("snapshot_delta: retained = today - added; an all-duplicate corpus has zero content churn") {
     val s = spark; import s.implicits._
-    import org.apache.spark.sql.functions._
     val rows = SparkEntry.queries("snapshot_delta")(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -798,7 +797,6 @@ class QueriesSpec extends AnyFunSuite with SharedSession {
 
   test("mix_shift is a [0,1] distance, zero for identical slices; lsh_plan's kept never exceeds cand") {
     val s = spark; import s.implicits._
-    import org.apache.spark.sql.functions._
     SparkEntry.queries("mix_shift")(spark, sf).collect().foreach { r =>
       if (!r.isNullAt(3)) {
         val tv = r.getDouble(3)
@@ -847,7 +845,6 @@ class QueriesSpec extends AnyFunSuite with SharedSession {
   }
 
   test("length_zipf buckets are exact log2 ranges; vocab_oov_rate and bucket_balance invariants") {
-    import org.apache.spark.sql.functions._
     SparkEntry.queries("length_zipf")(spark, sf).collect().foreach { r =>
       val (b, mn, mx) = (r.getLong(1), r.getLong(4), r.getLong(5))
       assert(mn >= (1L << b) && mx < (1L << (b + 1)),
@@ -1636,8 +1633,6 @@ class QueriesSpec extends AnyFunSuite with SharedSession {
         else None
       case _ => None
     }
-    val keyGen = Gen.oneOf("plain", "a.b", "a\"b", "a\\b", "$.x", "arr[0]",
-      "sp ace", "dash-key", "ключ")
     val valGen: Gen[JV] = Gen.oneOf(
       Gen.choose(-1000000L, 1000000L).map(JInt),
       Gen.oneOf("42", " 7 ", "+5", "-0", "1.5", "1e3", "0x10", "abc", "",
@@ -1801,7 +1796,6 @@ class QueriesSpec extends AnyFunSuite with SharedSession {
   test("r13: graph_triangles — degree-oriented count is exact on K4, a " +
        "star (0), and a triangle-with-pendant (1); each triangle counted " +
        "once despite hub-skewed degrees") {
-    import org.apache.spark.sql.functions._
     def run(orders: Seq[(Long, Long)]): (Long, Long, Long) = {
       val tmp = java.nio.file.Files.createTempDirectory("graft_tri").toString
       val s = spark; import s.implicits._
@@ -1828,7 +1822,6 @@ class QueriesSpec extends AnyFunSuite with SharedSession {
   test("r14: coOrderEdges memo revalidates the lineitem fingerprint — a " +
        "dir rewritten in-session rebuilds the edge frame instead of " +
        "serving stale co-order edges (the graphCache discipline)") {
-    import org.apache.spark.sql.functions._
     val s = spark; import s.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft_coedge_fresh").toString
     // K4: one order with 4 parts → 6 edges, 4 triangles
@@ -1856,7 +1849,6 @@ class QueriesSpec extends AnyFunSuite with SharedSession {
        "dominated ONLY via the sales criterion is killed, a point beaten " +
        "on price+size is saved by sales alone, and zero-sales parts " +
        "participate") {
-    import org.apache.spark.sql.functions._
     val s = spark; import s.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft_sky3").toString
     // (pk, price, size): A/B exact duplicates; C = A but fewer sales;
@@ -1950,7 +1942,6 @@ class QueriesSpec extends AnyFunSuite with SharedSession {
   test("r13: kcoreOf — the peel fixpoint on hand graphs: K4 + tail " +
        "(3-core = K4, multi-round peel), empty core, and the loud " +
        "max-rounds guard") {
-    import org.apache.spark.sql.functions._
     val s = spark; import s.implicits._
     // cycle {1,2,3,4} with a pendant path 4–5–6–7–8: at k=2 the path
     // peels ONE node per round (8 first — its removal lowers 7 below
@@ -2012,7 +2003,6 @@ class QueriesSpec extends AnyFunSuite with SharedSession {
   test("r13: interval_concurrency — closed-interval sweep semantics on a " +
        "hand-built day: shared-instant handoff counts both sessions, " +
        "instantaneous sessions count, days are independent") {
-    import org.apache.spark.sql.functions._
     val tmp = java.nio.file.Files.createTempDirectory("graft_sweep").toString
     val s = spark; import s.implicits._
     def t(day: Int, min: Int) =
@@ -2171,8 +2161,8 @@ class QueriesSpec extends AnyFunSuite with SharedSession {
     val k4b = for { a <- 5L to 8L; b <- (a + 1) to 8L } yield (a, b)
     val edges = (k4a ++ k4b ++ Seq((4L, 5L))).toDF("u", "v")
     def qnum(labels: Seq[(Long, Long)]): (Long, Long, Long, Long) = {
-      val r = graft.rel.RelQueries
-        .modularityStats(edges, labels.toDF("node", "part"), "t")
+      val r = graft.rel.Modularity
+        .stats(edges, labels.toDF("node", "part"), "t")
         .collect().head
       (r.getAs[Long]("q_num"), r.getAs[Long]("m"),
        r.getAs[Long]("intra_edges"), r.getAs[Long]("sum_deg_sq"))
@@ -2193,7 +2183,6 @@ class QueriesSpec extends AnyFunSuite with SharedSession {
   test("r16: the pagerank rank sequences persist as warehouse tables — " +
        "a fresh session replays all four graph queries with ZERO new " +
        "iterations, and a dropped-catalog session ADOPTS the files") {
-    import org.apache.spark.sql.functions._
     val s = spark; import s.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft_pr_persist")
       .toString
@@ -2240,7 +2229,6 @@ class QueriesSpec extends AnyFunSuite with SharedSession {
        "tables — a fresh session reuses them with ZERO fixpoint rounds, " +
        "and a session whose catalog forgot them ADOPTS the files " +
        "instead of rebuilding") {
-    import org.apache.spark.sql.functions._
     val s = spark; import s.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft_core_persist")
       .toString

@@ -475,11 +475,16 @@ class RangeJoinRewriteSpec extends AnyFunSuite with SharedSession with AdaptiveS
         (lit("2024-01-01 00:00:00").cast("timestamp") +
           expr(s"make_interval(0,0,0,0,0,0, id * 400)")).as("lo"))
         .withColumn("hi", col("lo") + expr(s"INTERVAL $lenSec SECONDS"))
-    assert(RangeJoin.deriveBinSeconds(ivs(500, 90), "lo", "hi") === 64L)
+    def derive(df: DataFrame): Long = RangeJoin.binsFor(timeAxis = true,
+      RangeJoin.lengthStats(df, col("lo"), col("hi"), timeAxis = true).toSeq) match {
+      case RangeJoin.SecondBins(seconds) => seconds
+      case other => fail(s"time axis binned as $other")
+    }
+    assert(derive(ivs(500, 90)) === 64L)
     // ...vs few long ones
-    assert(RangeJoin.deriveBinSeconds(ivs(3, 18000), "lo", "hi") === 16384L)
+    assert(derive(ivs(3, 18000)) === 16384L)
     // empty / all-null interval side falls back to the default
-    assert(RangeJoin.deriveBinSeconds(ivs(0, 90), "lo", "hi") ===
+    assert(derive(ivs(0, 90)) ===
       RangeJoin.DefaultBinSeconds)
     // and the auto API matches the fixed-width form row-for-row
     val ev = Tables.events(spark, sf)
@@ -487,10 +492,205 @@ class RangeJoinRewriteSpec extends AnyFunSuite with SharedSession with AdaptiveS
       .select(col("day"), (col("day") + expr("INTERVAL 10 HOURS")).as("lo"),
         (col("day") + expr("INTERVAL 14 HOURS")).as("hi"))
     val auto = RangeJoin.pointInInterval(ev, "ts", wins, "lo", "hi",
-        RangeJoin.deriveBinSeconds(wins, "lo", "hi"))
+        derive(wins))
       .select(col("event_id"), col("day")).collect().map(_.toString).sorted.toSeq
     val naive = ev.join(wins, col("ts") >= col("lo") && col("ts") < col("hi"))
       .select(col("event_id"), col("day"))
     assert(auto === naiveRows(naive))
+  }
+
+  test("the stats pass is memoized across invocations: re-building the " +
+       "same query (fresh exprIds) plans without running a job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val started = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        started.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    rawPointJoin().queryExecution.optimizedPlan // fills the memo
+    // built before listening: reading the parquet schema runs a job
+    val again = rawPointJoin()
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val plan = again.queryExecution.optimizedPlan.toString
+      assert(plan.contains(graft.rel.RangeJoin.BinCol), s"rule did not fire:\n$plan")
+      // the listener bus delivers in order: once the sentinel job shows,
+      // every job the planning started has shown too
+      spark.sparkContext.setJobDescription("sentinel")
+      try spark.range(1).count() finally spark.sparkContext.setJobDescription(null)
+      val before = Iterator.continually(
+          Option(started.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+            .getOrElse(fail("the sentinel job never reported")))
+        .takeWhile(_ != "sentinel").toList
+      assert(before.isEmpty, s"planning a re-built query ran jobs: $before")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  // ---- rule on ≡ rule off over random corpora ----
+
+  /** One endpoint axis: the raw value of grid step `k` with jitter `j`
+    * (ulps on the double axis, milliseconds on the timestamp axis), its
+    * raw Spark type, the conversion to the axis type, and the grid step
+    * of an interval long enough to trip the 4096-bins-per-interval
+    * explode ceiling. */
+  private case class Axis(name: String, raw: org.apache.spark.sql.types.DataType,
+                          enc: (Long, Int) => Any,
+                          conv: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
+                          huge: Long, numeric: Boolean)
+
+  private def ulps(v: Double, j: Int): Double =
+    if (j < 0) math.nextDown(v) else if (j > 0) math.nextUp(v) else v
+
+  private val Axes = {
+    import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
+    Seq(
+      Axis("timestamp", LongType, (k, j) => (1704067200L + k * 600L) * 1000L + j,
+        timestamp_millis, 1L << 24, numeric = false),
+      Axis("date", IntegerType, (k, _) => (19723L + k).toInt,
+        date_from_unix_date, 1L << 19, numeric = false),
+      Axis("double", DoubleType, (k, j) => ulps(k / 20d, j), identity, 1L << 40,
+        numeric = true),
+      Axis("long", LongType, (k, _) => k, identity, 1L << 40, numeric = true))
+  }
+
+  /** A grid point (step, jitter); None is a null value. */
+  private type V = Option[(Long, Int)]
+
+  /** Random frames plus fixed edge rows: null endpoints, a reversed and
+    * a zero-length interval, points exactly on `lo`/`hi`, the band pair
+    * (nextDown(0), 0.05) two bins apart at eps 0.05, the 0.95/1.00
+    * pair, and optionally the ceiling-tripping interval. */
+  private case class Corpus(pointsA: Seq[V], pointsB: Seq[V],
+                            ivsA: Seq[(V, V)], ivsB: Seq[(V, V)], huge: Boolean)
+
+  private val corpusGen = {
+    import org.scalacheck.Gen
+    val jitter = Gen.frequency(4 -> Gen.const(0), 1 -> Gen.const(-1), 1 -> Gen.const(1))
+    val value: Gen[V] = Gen.frequency(1 -> Gen.const(None),
+      8 -> Gen.zip(Gen.choose(-3L, 25L), jitter).map(Some(_)))
+    val interval: Gen[(V, V)] = for {
+      lo <- value
+      len <- Gen.choose(-2L, 8L)
+      j <- jitter
+      hiNull <- Gen.frequency(1 -> true, 8 -> false)
+      other <- value
+    } yield (lo, lo match {
+      case Some((k, _)) => if (hiNull) None else Some((k + len, j))
+      case None => other
+    })
+    val edgePoints: Seq[V] = Seq(Some((0L, -1)), Some((1L, 0)), Some((19L, 0)),
+      Some((20L, 0)), Some((5L, 0)), None)
+    val edgeIvs: Seq[(V, V)] = Seq((Some((5L, 0)), Some((9L, 0))),
+      (Some((1L, 0)), Some((5L, 0))), (Some((5L, 0)), Some((5L, 0))),
+      (Some((8L, 0)), Some((3L, 0))), (None, Some((4L, 0))), (Some((2L, 0)), None))
+    for {
+      pa <- Gen.choose(0, 10).flatMap(Gen.listOfN(_, value))
+      pb <- Gen.choose(0, 10).flatMap(Gen.listOfN(_, value))
+      ia <- Gen.choose(0, 8).flatMap(Gen.listOfN(_, interval))
+      ib <- Gen.choose(0, 8).flatMap(Gen.listOfN(_, interval))
+      huge <- Gen.oneOf(true, false)
+    } yield Corpus(pa ++ edgePoints, edgePoints.reverse ++ pb, ia ++ edgeIvs,
+      edgeIvs.take(3) ++ ib, huge)
+  }
+
+  /** `rows` as a frame `(id, cols...)` on `axis`, ids in row order. */
+  private def axisFrame(axis: Axis, id: String, cols: Seq[String],
+                        rows: Seq[Seq[V]]): DataFrame = {
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    import scala.jdk.CollectionConverters._
+    val schema = StructType(StructField(id, LongType) +:
+      cols.map(StructField(_, axis.raw)))
+    val data = rows.zipWithIndex.map { case (vs, i) =>
+      org.apache.spark.sql.Row.fromSeq(i.toLong +: vs.map(
+        _.map { case (k, j) => axis.enc(k, j) }.orNull))
+    }
+    spark.createDataFrame(data.asJava, schema)
+      .select(col(id) +: cols.map(c => axis.conv(col(c)).as(c)): _*)
+  }
+
+  private def sortedRows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  private val JoinTypes =
+    Seq("inner", "left_outer", "right_outer", "left_semi", "left_anti", "full_outer")
+
+  test("scalacheck: rule on ≡ rule off for every shape, axis and join " +
+       "type on random corpora with null, reversed, zero-length, " +
+       "on-the-edge and ceiling-tripping rows; the explicit RangeJoin " +
+       "API ≡ the naive join at random widths") {
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    import org.scalacheck.Prop.propBoolean
+    import org.scalacheck.rng.Seed
+    import graft.rel.RangeJoin
+    val hugeIv: Axis => (V, V) = a => (Some((-a.huge, 0)), Some((a.huge, 0)))
+    val widths = Gen.zip(Gen.oneOf(7L, 60L, 600L, 3600L, 86400L),
+      Gen.oneOf(0.05d, 0.1d, 0.35d, 1d))
+    val prop = Prop.forAllNoShrink(corpusGen, widths) { case (c, (secs, eps)) =>
+      val failures = Seq.newBuilder[String]
+      for (axis <- Axes) {
+        def ivs(rows: Seq[(V, V)], pre: String, huge: Boolean): DataFrame =
+          axisFrame(axis, s"${pre}id", Seq(s"${pre}lo", s"${pre}hi"),
+            (if (huge) rows :+ hugeIv(axis) else rows).map { case (l, h) => Seq(l, h) })
+        def pts(rows: Seq[V], pre: String): DataFrame =
+          axisFrame(axis, s"${pre}id", Seq(s"${pre}v"), rows.map(Seq(_)))
+        val pa = pts(c.pointsA, "a")
+        val pb = pts(c.pointsB, "b")
+        val ia = ivs(c.ivsA, "i", c.huge)
+        val ib = ivs(c.ivsB, "j", c.huge)
+        val bandEps = if (axis.raw == org.apache.spark.sql.types.LongType) lit(3) else lit(0.05d)
+        val shapes: Seq[(String, DataFrame, DataFrame, org.apache.spark.sql.Column)] =
+          Seq(
+            ("point left", pa, ia, col("av") >= col("ilo") && col("av") < col("ihi")),
+            ("point right", ia, pb, col("ilo") < col("bv") && col("bv") <= col("ihi")),
+            ("overlap", ia, ib, col("ilo") < col("jhi") && col("jlo") < col("ihi"))) ++
+          (if (axis.numeric)
+            Seq(("band", pa, pb, abs(col("av") - col("bv")) <= bandEps))
+          else Nil)
+        for ((shape, l, r, cond) <- shapes; jt <- JoinTypes) {
+          val what = s"${axis.name} $shape $jt"
+          val on = l.join(r, cond, jt)
+          val fired = on.queryExecution.optimizedPlan.toString
+            .contains("__graft_range_bin")
+          val fires = jt match {
+            case "inner" | "full_outer" => true
+            case "right_outer" => shape == "point right" || shape == "band"
+            case _ => shape == "point left" || shape == "band"
+          }
+          if (fired != fires) failures += s"$what: rule fired=$fired, expected $fires"
+          if (sortedRows(on) != naiveRows(l.join(r, cond, jt)))
+            failures += s"$what: rows differ from the disabled rule"
+        }
+        // the explicit API at a random width (the ceiling-tripping row is
+        // left out: the explicit width has no explode ceiling)
+        if (axis.name == "timestamp") {
+          val ia0 = ivs(c.ivsA, "i", huge = false)
+          val ib0 = ivs(c.ivsB, "j", huge = false)
+          val pit = RangeJoin.pointInInterval(pa, "av", ia0, "ilo", "ihi", secs)
+            .select(col("aid"), col("iid"))
+          if (sortedRows(pit) != naiveRows(pa.join(ia0,
+              col("av") >= col("ilo") && col("av") < col("ihi")).select(col("aid"), col("iid"))))
+            failures += s"pointInInterval at $secs s differs from the naive join"
+          val ov = RangeJoin.intervalOverlap(ia0, "ilo", "ihi", ib0, "jlo", "jhi", secs)
+            .select(col("iid"), col("jid"))
+          if (sortedRows(ov) != naiveRows(ia0.join(ib0,
+              col("ilo") < col("jhi") && col("jlo") < col("ihi")).select(col("iid"), col("jid"))))
+            failures += s"intervalOverlap at $secs s differs from the naive join"
+        }
+        if (axis.numeric) {
+          val band = RangeJoin.bandJoin(pa, "av", pb, "bv", eps)
+            .select(col("aid"), col("bid"))
+          if (sortedRows(band) != naiveRows(pa.join(pb,
+              abs(col("av") - col("bv")) <= eps).select(col("aid"), col("bid"))))
+            failures += s"${axis.name} bandJoin at eps $eps differs from the naive join"
+        }
+      }
+      val f = failures.result()
+      f.isEmpty :| f.mkString("; ")
+    }
+    val res = SCTest.check(
+      SCTest.Parameters.default.withMinSuccessfulTests(6)
+        .withInitialSeed(Seed(20261019L)), prop)
+    assert(res.passed, s"range-join parity failed: ${res.status}")
   }
 }

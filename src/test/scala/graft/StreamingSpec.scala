@@ -349,6 +349,39 @@ class StreamingSpec extends AnyFunSuite with SharedSession with BeforeAndAfterAl
     }
   }
 
+  test("streaming RPC at zero lateness: a req_id reused with ts >= its deadline " +
+       "in the batch right after cleanup starts a new conversation") {
+    implicit val sq = spark.sqlContext
+    implicit val sp: SparkSession = spark
+    import spark.implicits._
+    withRocksDbProvider {
+      val in = MemoryStream[Streams.RpcMsg]
+      val q = Streams.rpcStream(in.toDS(), timeoutMs = 10000L,
+          watermarkDelay = "0 seconds")
+        .writeStream.outputMode("append").format("memory").queryName("rpc_reuse").start()
+      def outcomes(id: Long): Seq[(Long, Long, String)] =
+        spark.table("rpc_reuse").as[Streams.RpcOutcome].collect()
+          .filter(_.req_id == id).map(o => (o.code, o.event_id, o.payload)).toSeq.sorted
+      try {
+        in.addData(Streams.RpcMsg(5L, "req", ts(0), 100L, "ping"))
+        q.processAllAvailable()
+        // the watermark passes req 5's deadline (t=10s) at the end of this
+        // batch; the no-data batch that follows fires its cleanup timer
+        in.addData(Streams.RpcMsg(6L, "req", ts(1), 101L, "scaffold"))
+        q.processAllAvailable()
+        assert(outcomes(5L) === Seq((408L, -1L, "request time out")),
+          "premise: req 5 timed out and its state was cleaned up")
+        // the very next batch reuses req_id 5 past its old deadline
+        in.addData(
+          Streams.RpcMsg(5L, "req", ts(2), 102L, "ping-again"),
+          Streams.RpcMsg(5L, "res", ts(2), 103L, "pong-again"))
+        q.processAllAvailable()
+      } finally q.stop()
+      assert(outcomes(5L) === Seq((200L, 103L, "pong-again"), (408L, -1L, "request time out")),
+        "the reused req_id must resolve as a second conversation")
+    }
+  }
+
   test("rpcStream recovers from a checkpoint: the armed timer fires exactly once, the tombstone survives") {
     // the production recovery contract for the RPC gate: a request whose
     // deadline timer was armed BEFORE the crash must still 408 exactly

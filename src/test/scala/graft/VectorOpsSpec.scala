@@ -390,7 +390,6 @@ class VectorOpsSpec extends AnyFunSuite with SharedSession {
 
   test("r12: maxsim_rerank — every winner comes from the dense top-20 pool, " +
       "the re-rank genuinely reorders it, scores match the standalone kernel") {
-    import org.apache.spark.sql.functions._
     val got = VectorOps.maxsimRerank(spark, sf).collect()
     assert(got.map(r => (r.getLong(0), r.getLong(2))).toSet ===
       (for (q <- 0L until 5L; r <- 1L to 3L) yield (q, r)).toSet)
@@ -641,7 +640,6 @@ class VectorOpsSpec extends AnyFunSuite with SharedSession {
 
   test("r13: emb_margin_mine — the margin rule rejects the hub vector a " +
        "raw cosine argmax would pick, and keeps the true match") {
-    import org.apache.spark.sql.functions._
     val s = spark; import s.implicits._
     val dim = 64
     def unit(i: Int): Array[Float] =
@@ -678,7 +676,6 @@ class VectorOpsSpec extends AnyFunSuite with SharedSession {
   test("r13: ann_hamming — sign-pack halves are exact, Hamming equals the " +
        "flipped-sign count on crafted vectors, and the graded ranking is " +
        "deterministic") {
-    import org.apache.spark.sql.functions._
     val s = spark; import s.implicits._
     // base vector: alternating signs; flips at positions 3, 17 (half 1)
     // and 40, 41, 63 (half 2) → hamming 2 + 3 = 5

@@ -5,10 +5,10 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.ZOrder
+import graft.sources.{ZOrder, ZOrderLayout}
 
 /** Proves the Z-order clustered layout does what it claims: after
-  * [[ZOrder.writeClustered]], each parquet file covers a compact
+  * [[ZOrderLayout.writeClustered]], each parquet file covers a compact
   * rectangle of the 2-D key space, so a range predicate on EITHER
   * dimension overlaps only a fraction of the files (file-level min/max
   * pruning — the same mechanism BusLayoutSpec proves for partition
@@ -56,7 +56,7 @@ class ZOrderSpec extends AnyFunSuite with SharedSession {
       .withColumn("a", conv(substring(h, 1, 4), 16, 10).cast("long") % 1024)
       .withColumn("b", conv(substring(h, 5, 4), 16, 10).cast("long") % 1024)
       .select("a", "b", "value")
-    ZOrder.writeClustered(df, path, "a", "b", files = 8)
+    ZOrderLayout.writeClustered(df, path, "a", "b", files = 8)
 
     val rects = spark.read.parquet(path)
       .withColumn("f", input_file_name())
