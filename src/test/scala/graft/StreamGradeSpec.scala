@@ -6,6 +6,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.stream.StreamGrade
+import graft.StreamGradeSpec.Run
 
 /** The oracle-gated streaming queries (SURVEY §2b streaming — the
   * reference's native domain driven through the hash gate): each graded
@@ -25,6 +26,43 @@ class StreamGradeSpec extends AnyFunSuite with SharedSession with BeforeAndAfter
 
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().toSeq.map(_.toString)
+
+  private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
+  private val RocksClass =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** Run `body` and return its value and the streaming query lifetimes
+    * it started, in start order. `onQueryStarted` runs before `start()` returns, so the
+    * provider read there is the one the query started with; the other
+    * events arrive on the listener bus, so wait until every run has
+    * terminated (its progress events precede its termination event). */
+  private def runsOf[A](body: => A): (A, Seq[Run]) = {
+    import java.util.UUID
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    import scala.jdk.CollectionConverters._
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[(UUID, Option[String])]()
+    val batches = new java.util.concurrent.ConcurrentHashMap[UUID, Integer]()
+    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[UUID]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit =
+        started.add(e.runId -> spark.conf.getOption(ProviderKey))
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        if (e.progress.numInputRows > 0L) batches.merge(e.progress.runId, 1, _ + _)
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ended.add(e.runId)
+    }
+    spark.streams.addListener(listener)
+    val value = try {
+      val v = body
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      def open = started.asScala.filterNot(r => ended.contains(r._1))
+      while (open.nonEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(open.isEmpty, "a started query never reported its termination")
+      v
+    } finally spark.streams.removeListener(listener)
+    (value, started.asScala.toSeq.map { case (id, p) =>
+      Run(p, batches.getOrDefault(id, 0).intValue) })
+  }
 
   test("cdc_stream_counters: streaming == batch subCounters, across 3 micro-batches") {
     val got = rows(StreamGrade.streamCounters(spark, dir))
@@ -460,6 +498,63 @@ class StreamGradeSpec extends AnyFunSuite with SharedSession with BeforeAndAfter
       "no version straddles the restart boundary — the recovery claim is vacuous")
   }
 
+  test("each restart row == its uninterrupted sibling, and every query lifetime " +
+      "processes data") {
+    type Row = (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame
+    val table: Seq[(String, Row, Row, Int)] = Seq(
+      ("cdc_stream_restart_scd2", StreamGrade.streamRestartScd2, StreamGrade.streamScd2, 2),
+      ("cdc_stream_restart_ivm", StreamGrade.streamRestartIvm, StreamGrade.streamIvm, 2),
+      ("cdc_stream_restart_ivm_minmax", StreamGrade.streamRestartIvmMinMax,
+        StreamGrade.streamIvmMinMax, 2),
+      ("cdc_stream_restart_ivm_distinct", StreamGrade.streamRestartIvmDistinct,
+        StreamGrade.streamIvmDistinct, 2),
+      ("cdc_stream_restart_ivm_join", StreamGrade.streamRestartIvmJoin,
+        StreamGrade.streamIvmJoin, 2),
+      ("cdc_stream_restart_asof", StreamGrade.streamRestartAsOf, StreamGrade.streamAsOfJoin, 2),
+      // the third lifetime redelivers the whole stream from a fresh checkpoint
+      ("emb_stream_restart_maintained", StreamGrade.streamRestartIndexMaint,
+        StreamGrade.streamIndexMaint, 3))
+    for ((name, restart, uninterrupted, lifetimes) <- table) {
+      val (got, runs) = runsOf(rows(restart(spark, dir)))
+      assert(runs.size === lifetimes, s"$name: query lifetimes")
+      assert(runs.forall(_.dataBatches > 0), s"$name: a lifetime processed no data: $runs")
+      val want = rows(uninterrupted(spark, dir))
+      assert(got.nonEmpty && got === want, s"$name differs from its uninterrupted sibling")
+    }
+  }
+
+  test("the state-store provider of every graded row, called directly, follows its " +
+      "plan: RocksDB exactly where the stream holds a transformWithState") {
+    val rocks = Set(
+      "cdc_stream_scd2", "cdc_stream_gaps", "cdc_stream_rpc", "cdc_stream_take",
+      "cdc_stream_user_features", "cdc_stream_asof_join", "cdc_stream_dedup",
+      "cdc_stream_ivm", "cdc_stream_ivm_minmax", "cdc_stream_ivm_distinct",
+      "cdc_stream_ivm_join", "cdc_stream_restart_scd2", "cdc_stream_restart_asof",
+      "cdc_stream_restart_ivm", "cdc_stream_restart_ivm_minmax",
+      "cdc_stream_restart_ivm_distinct", "cdc_stream_restart_ivm_join",
+      "doc_stream_neardup", "doc_stream_vocab_novelty", "doc_stream_substring_dup",
+      "doc_stream_logreg", "doc_stream_mix_shift", "doc_stream_pipeline",
+      "emb_stream_centroid_drift", "mm_stream_phash_dup")
+    assert(StreamGrade.raw.size === 43 && rocks.subsetOf(StreamGrade.raw.keySet))
+    // unset, the key reads as Spark's default provider
+    val ambient = spark.conf.get(ProviderKey)
+    assert(ambient != RocksClass)
+    for ((name, row) <- StreamGrade.raw.toSeq.sortBy(_._1)) {
+      val (_, runs) = runsOf(row(spark, dir))
+      val want = if (rocks(name)) RocksClass else ambient
+      assert(runs.nonEmpty && runs.forall(_.provider.contains(want)), s"$name: $runs")
+      assert(spark.conf.get(ProviderKey) === ambient, s"$name leaked its provider")
+    }
+    // a transformWithState row outside any window restores whatever
+    // provider the session held, not Spark's default (this class name is
+    // never loaded: the row runs under RocksDB)
+    withConf(ProviderKey -> "graft.AmbientProvider") {
+      val (_, runs) = runsOf(StreamGrade.streamScd2(spark, dir))
+      assert(runs.nonEmpty && runs.forall(_.provider.contains(RocksClass)))
+      assert(spark.conf.get(ProviderKey) === "graft.AmbientProvider")
+    }
+  }
+
   test("cdc_stream_scd2: streamed closed versions == batch SCD2 closed rows, across 3 micro-batches") {
     val got = rows(StreamGrade.streamScd2(spark, dir))
     assert(StreamGrade.batchCount("stream_scd2") === 3)
@@ -490,4 +585,11 @@ class StreamGradeSpec extends AnyFunSuite with SharedSession with BeforeAndAfter
       assert(spark.conf.get(key) === "2")
     }
   }
+}
+
+object StreamGradeSpec {
+  /** One query lifetime (one run id) started while `runsOf`'s body ran:
+    * the session's state-store provider at its start and its
+    * data-carrying micro-batch count. */
+  final case class Run(provider: Option[String], dataBatches: Int)
 }
